@@ -80,5 +80,22 @@ def triangle_total(g: nx.Graph) -> int:
     return sum(nx.triangles(g).values()) // 3
 
 
+def components(g: nx.Graph) -> tuple[np.ndarray, np.ndarray]:
+    """Per vertex id: the least id of its component, and the component's
+    size (the engine's ``component`` / ``component_size`` columns)."""
+    comp = np.empty(g.number_of_nodes(), dtype=np.int64)
+    size = np.empty_like(comp)
+    for members in nx.connected_components(g):
+        ids = np.fromiter(members, dtype=np.int64)
+        comp[ids] = ids.min()
+        size[ids] = len(ids)
+    return comp, size
+
+
+def coreness(g: nx.Graph) -> np.ndarray:
+    core = nx.core_number(g)
+    return np.array([core[v] for v in range(g.number_of_nodes())], dtype=np.int64)
+
+
 def close(got: np.ndarray, want: np.ndarray, tol: float) -> bool:
     return got.shape == want.shape and bool(np.all(np.abs(got - want) <= tol))

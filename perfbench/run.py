@@ -32,7 +32,13 @@ import tracing as tr  # noqa: E402
 from workloads import WORKLOADS, PassOutput, du  # noqa: E402
 
 CORES = 4
-SETUPS = 3
+SETUPS = 5
+#: driver heap, fixed at launch (-Xms = -Xmx): a heap left to grow from
+#: the JVM's default start size expands at GC-timing-dependent moments,
+#: and peak_rss_mb then spread by 0.14-0.21 of its median across seeds
+DRIVER_MEM = "2g"
+#: the canonical edge forms a kernel derives from ``g.edges``
+CANON_FORMS = ("dedup_edges", "canonical_undirected", "symmetrize")
 
 END_TO_END = {
     "setup_s": "s",
@@ -74,7 +80,7 @@ class Run:
         # everything the engine, Spark and Python write goes under self.work
         os.environ["PROPAGON_LOCAL_DIR"] = os.path.join(self.work, "local")
         os.environ["PROPAGON_CHECKPOINT_DIR"] = os.path.join(self.work, "ckpt")
-        os.environ["PROPAGON_DRIVER_MEM"] = "2g"
+        os.environ["PROPAGON_DRIVER_MEM"] = DRIVER_MEM
         os.environ["TMPDIR"] = os.path.join(self.work, "tmp")
         # the launcher JVM that spark-submit runs first writes perf data
         # and temp files too
@@ -89,7 +95,7 @@ class Run:
         from propagon_spark import get_spark
 
         conf = {
-            "spark.driver.extraJavaOptions": self.java_opts,
+            "spark.driver.extraJavaOptions": f"{self.java_opts} -Xms{DRIVER_MEM}",
             "spark.sql.warehouse.dir": os.path.join(self.work, "warehouse"),
             "spark.ui.showConsoleProgress": "false",
         }
@@ -170,7 +176,7 @@ def _alive(pid: int) -> bool:
 
 
 def run_pass(run: Run, wl, k: int, outputs: list[PassOutput]) -> tuple[tr.Span, object]:
-    out = PassOutput()
+    out = PassOutput(ops=list(wl.ops))
     outputs.append(out)
     g = None
     with run.span("pass"):
@@ -182,21 +188,24 @@ def run_pass(run: Run, wl, k: int, outputs: list[PassOutput]) -> tuple[tr.Span, 
 
 
 def pass_metrics(run: Run, out: PassOutput, span: tr.Span) -> dict:
-    """Samples of one warm pass, as lists (a pass may build more than once)."""
-    m = {"run_s": [span.seconds]}
+    """Samples of one warm pass; a call that failed gives no sample."""
+    m = {"run_s": span.seconds}
     if "build" in out.done:
-        m["build_s"] = [s.seconds for s in run.tracer.within(span, "build")]
+        m["build_s"] = run.tracer.last("build").seconds
     if "pagerank" in out.done:
         fit = out.values["pagerank_fit"]
         secs = run.tracer.last("pagerank").seconds
-        m["pagerank_s"] = [secs]
-        m["edges_per_s"] = [fit.timings["edge_rows"] * fit.iterations / secs]
+        m["pagerank_s"] = secs
+        m["edges_per_s"] = fit.timings["edge_rows"] * fit.iterations / secs
     return m
 
 
-def per_layer(run: Run, wl, out: PassOutput, counters: dict, start_s: float) -> dict:
-    """Per-layer metrics of the traced pass; 0 where a layer does no work
-    on this workload (or its call failed, which ``failed`` reports)."""
+def per_layer(
+    run: Run, out: PassOutput, counters: dict, start_s: float, canon_calls: int
+) -> dict:
+    """Per-layer metrics of the traced pass. A layer that does not run on
+    this workload, or whose call failed (``failed`` reports it), is left
+    out."""
     sp = {s.name: s for s in run.tracer.spans}  # the last span of each name
 
     def c(*groups) -> tr.GroupCounters:
@@ -211,9 +220,7 @@ def per_layer(run: Run, wl, out: PassOutput, counters: dict, start_s: float) -> 
     def util(name: str) -> float:
         return c(name, name + ".iter").run_s / (sp[name].seconds * CORES)
 
-    m = {name: 0.0 for name in PER_LAYER}
-    m["session.start_s"] = start_s
-    m["canon.derivations"] = len(wl.derives_form)
+    m = {"session.start_s": start_s, "canon.derivations": canon_calls}
     if "probe.derive" in sp:
         m["sources.derive_s"] = sp["probe.derive"].seconds
         m["sources.edge_rows"] = out.values["derived_rows"]
@@ -223,15 +230,13 @@ def per_layer(run: Run, wl, out: PassOutput, counters: dict, start_s: float) -> 
         m["canon.undirected_s"] = sp["probe.undirected"].seconds
         m["canon.sym_distinct_s"] = sp["probe.sym_distinct"].seconds
     if "build" in out.done:
-        # per build call: join_loops builds its graph several times a pass
-        builds = run.tracer.within(run.tracer.last("pass"), "build")
         b = c("build")
-        m["core.build_s"] = statistics.median(s.seconds for s in builds)
-        m["core.jobs"] = b.jobs / len(builds)
-        m["core.shuffle_write_bytes"] = b.shuffle_write_bytes / len(builds)
-        m["core.spill_bytes"] = b.spill_bytes / len(builds)
-        m["core.gc_s"] = b.gc_s / len(builds)
-        m["core.util"] = b.run_s / (sum(s.seconds for s in builds) * CORES)
+        m["core.build_s"] = sp["build"].seconds
+        m["core.jobs"] = b.jobs
+        m["core.shuffle_write_bytes"] = b.shuffle_write_bytes
+        m["core.spill_bytes"] = b.spill_bytes
+        m["core.gc_s"] = b.gc_s
+        m["core.util"] = util("build")
     if "pagerank" in out.done:
         fit = out.values["pagerank_fit"]
         turns = run.iter_metrics["pagerank"]
@@ -281,13 +286,16 @@ def per_layer(run: Run, wl, out: PassOutput, counters: dict, start_s: float) -> 
         m["hits.jobs_per_iter"] = h.jobs / later_iters
         m["hits.shuffle_bytes_per_iter"] = h.shuffle_write_bytes / later_iters
         m["hits.util"] = util("hits")
-    if "triangles" in out.done:
-        tri = c("triangles")
-        m["triangles.s"] = sp["triangles"].seconds
-        m["triangles.jobs"] = tri.jobs
-        m["triangles.shuffle_bytes"] = tri.shuffle_write_bytes
-        m["triangles.spill_bytes"] = tri.spill_bytes
-        m["triangles.util"] = util("triangles")
+    for op in ("components", "lpa", "triangles", "kcore"):
+        if op in out.done:
+            k = c(op, op + ".iter")
+            m[op + ".s"] = sp[op].seconds
+            m[op + ".jobs"] = k.jobs
+            m[op + ".shuffle_bytes"] = k.shuffle_write_bytes
+            m[op + ".spill_bytes"] = k.spill_bytes
+            m[op + ".util"] = util(op)
+    if "components" in out.done:
+        m["components.rounds"] = len(run.iter_metrics["components"])
     if "output" in out.done:
         m["output.write_s"] = sp["output"].seconds
         m["output.bytes"] = du(out.values["output"])
@@ -336,11 +344,27 @@ PER_LAYER = {
     "hits.util": "ratio",
     "checkpoint.saves": "count",
     "checkpoint.bytes": "bytes",
+    "components.s": "s",
+    "components.jobs": "count",
+    "components.shuffle_bytes": "bytes",
+    "components.spill_bytes": "bytes",
+    "components.util": "ratio",
+    "components.rounds": "count",
+    "lpa.s": "s",
+    "lpa.jobs": "count",
+    "lpa.shuffle_bytes": "bytes",
+    "lpa.spill_bytes": "bytes",
+    "lpa.util": "ratio",
     "triangles.s": "s",
     "triangles.jobs": "count",
     "triangles.shuffle_bytes": "bytes",
     "triangles.spill_bytes": "bytes",
     "triangles.util": "ratio",
+    "kcore.s": "s",
+    "kcore.jobs": "count",
+    "kcore.shuffle_bytes": "bytes",
+    "kcore.spill_bytes": "bytes",
+    "kcore.util": "ratio",
     "output.write_s": "s",
     "output.bytes": "bytes",
     "trace.overhead_s": "s",
@@ -386,16 +410,17 @@ def main(argv=None) -> int:
         stats = wl.edges.stats()
         outputs: list[PassOutput] = []
 
-        setup = []
+        # the first setup launches the JVM; the others stop the
+        # SparkContext and start a new one in the same JVM
+        setup, starts = [], []
         for i in range(SETUPS):
             if i:
                 run.stop_session()
             t0 = time.monotonic()
-            start_s = run.start_session()
+            starts.append(run.start_session())
             wl.load(run.spark)
             setup.append(time.monotonic() - t0)
             if sampler is None:
-                first_start_s = start_s
                 sampler = tr.RssSampler(run.jvm.pid)
                 sampler.start()
 
@@ -416,20 +441,33 @@ def main(argv=None) -> int:
             run.stop_session()
             run.start_session(event_log=True)
             run.tracer.sc = run.spark.sparkContext
-            traced, g = run_pass(run, wl, len(outputs), outputs)
+            with tr.count_calls("propagon_spark", "propagon_spark.canon", CANON_FORMS) as calls:
+                traced, g = run_pass(run, wl, len(outputs), outputs)
+                if g is not None and wl.traced_ops:
+                    outputs[-1].ops += wl.traced_ops
+                    try:
+                        wl.run_undirected(run, g, outputs[-1], wl.traced_ops)
+                    except Exception:
+                        traceback.print_exc()
             if g is not None:
                 probes(run, wl, g, outputs[-1])
                 g.unpersist()
             run.tracer.sc = None
             run.stop_session()
-            layers = per_layer(run, wl, outputs[-1], tr.fold_event_log(run.events), first_start_s)
-            layers["trace.overhead_s"] = traced.seconds - statistics.median(
-                x for w in warm for x in w["run_s"]
+            layers = per_layer(
+                run,
+                outputs[-1],
+                tr.fold_event_log(run.events),
+                statistics.median(starts),
+                sum(calls.values()),
             )
-        attempted = len(wl.ops) * len(outputs)
+            layers["trace.overhead_s"] = traced.seconds - statistics.median(
+                w["run_s"] for w in warm
+            )
+        attempted = sum(len(out.ops) for out in outputs)
         failed = 0
         for k, out in enumerate(outputs):
-            bad = set(wl.check(out)) | (set(wl.ops) - set(out.done))
+            bad = set(wl.check(out)) | (set(out.ops) - set(out.done))
             if bad:
                 print(f"pass {k}: failed {sorted(bad)}", file=sys.stderr)
             failed += len(bad)
@@ -450,7 +488,7 @@ def main(argv=None) -> int:
         o.values["pagerank_fit"].iterations for o in outputs if "pagerank" in o.done
     ]
     for name in ("run_s", "build_s", "pagerank_s", "edges_per_s"):
-        e2e_samples[name] = [x for w in warm for x in w.get(name, [])]
+        e2e_samples[name] = [w[name] for w in warm if name in w]
 
     print(f"workload {args.workload} seed {args.seed}: {json.dumps(stats)}")
     print(f"host {json.dumps(host)}")
@@ -462,7 +500,8 @@ def main(argv=None) -> int:
     if layers is not None:
         print("per-layer (traced pass):")
         for name, unit in PER_LAYER.items():
-            print(f"  {name:<38}{layers[name]:>16.4f}  {unit}")
+            if name in layers:
+                print(f"  {name:<38}{layers[name]:>16.4f}  {unit}")
 
     if layers is None:
         metrics = {
@@ -471,7 +510,9 @@ def main(argv=None) -> int:
             if e2e_samples[n]
         }
     else:
-        metrics = {n: {"value": float(layers[n]), "unit": u} for n, u in PER_LAYER.items()}
+        metrics = {
+            n: {"value": float(layers[n]), "unit": u} for n, u in PER_LAYER.items() if n in layers
+        }
     print(
         json.dumps(
             {

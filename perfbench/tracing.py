@@ -5,17 +5,20 @@ span carries a name, start and end (monotonic seconds), its parent span
 and the run id; spans live in memory and are written once at the end of
 the run. In the traced run every span also tags the Spark jobs it starts
 with a job group named after the span, and after the session stops the
-event log's ``TaskEnd`` records are folded per job group.
+event log's ``TaskEnd`` records are folded per job group. ``count_calls``
+counts the engine's calls into its canonical edge forms.
 """
 
 from __future__ import annotations
 
+import functools
 import glob
 import json
 import os
+import sys
 import threading
 import time
-from collections import defaultdict
+from collections import Counter, defaultdict
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
@@ -65,17 +68,51 @@ class Tracer:
     def last(self, name: str) -> Span:
         return next(s for s in reversed(self.spans) if s.name == name)
 
-    def within(self, outer: Span, name: str) -> list[Span]:
-        """Spans called ``name`` that ran inside ``outer``."""
-        return [
-            s for s in self.spans
-            if s.name == name and outer.start <= s.start and s.end <= outer.end
-        ]
-
     def write(self, path: str) -> None:
         with open(path, "w") as f:
             for s in self.spans:
                 f.write(json.dumps(s.__dict__) + "\n")
+
+
+@contextmanager
+def count_calls(package: str, source: str, names: tuple[str, ...]):
+    """Count calls to the functions ``names`` of module ``source`` made
+    while the block runs. Modules bind such functions by name at import,
+    so the binding in ``source`` and in every loaded module of ``package``
+    is wrapped (modules imported inside the block bind the wrapper), and
+    every wrapped binding is restored afterwards. Yields a Counter by
+    name."""
+    src = sys.modules[source]
+    calls: Counter = Counter()
+    originals = {}
+
+    def counting(name, fn):
+        @functools.wraps(fn)
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+
+        originals[wrapper] = fn
+        return wrapper
+
+    def modules():
+        return [
+            m for m in list(sys.modules.values())
+            if m is not None and getattr(m, "__name__", "").startswith(package + ".")
+        ]
+
+    wrappers = {name: counting(name, getattr(src, name)) for name in names}
+    for mod in modules():
+        for name, w in wrappers.items():
+            if getattr(mod, name, None) is originals[w]:
+                setattr(mod, name, w)
+    try:
+        yield calls
+    finally:
+        for mod in modules():
+            for name, w in wrappers.items():
+                if getattr(mod, name, None) is w:
+                    setattr(mod, name, originals[w])
 
 
 @dataclass

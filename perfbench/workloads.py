@@ -9,16 +9,20 @@ after the timed passes, so no oracle work lands in a timed region.
 - ``repo_pagerank``: the north-rule pipeline over interned names —
   repo table → ``load_repo_table`` → ``derive_edges`` → ``Graph.from_edges``
   → ``pagerank(tol=1e-6)`` (auto-dispatch picks the CSR kernel) → write
-  the sorted scores → ``triangle_total``. Derivation, interning,
-  ``pagerank_csr``, the triangle wedge join and two per-kernel canonical
-  forms do the work; the DataFrame join loop is bypassed.
+  the sorted scores → ``connected_components`` → ``triangle_total``.
+  Derivation, interning, ``pagerank_csr``, the min-label rounds and the
+  triangle wedge join do the work; the DataFrame join loop is bypassed.
+  The traced run adds ``label_propagation(max_rounds=LPA_ROUNDS)``.
 - ``join_loops``: a dense-id edge file (every vertex is an endpoint, so
-  no sinks) → ``Graph.from_dense_ids`` (``BUILDS`` times) →
-  ``pagerank(impl="join", tol=1e-6)`` with a durable checkpoint every 5
-  iterations →
-  ``hits(iterations=4)``. Per-job fixed cost, lineage truncation and
+  no sinks) → ``Graph.from_dense_ids`` → ``pagerank(impl="join",
+  tol=1e-6)`` with a durable checkpoint every 5 iterations →
+  ``hits(iterations=2)``. Per-job fixed cost, lineage truncation and
   checkpoint writes do the work; derivation, interning and CSR are
-  bypassed.
+  bypassed. The traced run adds ``kcore`` after its traced pass (see
+  ``traced_ops``).
+
+Both graphs are symmetric co-commit graphs without self-loops, so the
+undirected kernels run on either as they are.
 """
 
 from __future__ import annotations
@@ -36,13 +40,10 @@ import oracle
 
 PAGERANK_TOL = 1e-6
 PAGERANK_ERR = 1e-6  # per-vertex |engine - oracle| allowed for PageRank
-HITS_ITERATIONS = 4
+HITS_ITERATIONS = 2
 HITS_ERR = 1e-9
 CHECKPOINT_INTERVAL = 5
-#: join_loops builds its graph this many times a pass and build_s is the
-#: median: one ``from_dense_ids`` call (~0.5 s) is too short to time
-#: steadily on its own
-BUILDS = 5
+LPA_ROUNDS = 5
 
 #: ~5.3k vertices / ~165k edge rows: small enough that a run fits its time
 #: budget on 4 cores, where per-job fixed cost already dominates every
@@ -61,21 +62,39 @@ def du(path: str) -> int:
 
 @dataclass
 class PassOutput:
-    """What one pass produced; ``done`` lists the ops that returned."""
+    """What one pass produced: ``ops`` lists the ops it attempted and
+    ``done`` the ones that returned."""
 
+    ops: list[str] = field(default_factory=list)
     done: list[str] = field(default_factory=list)
     values: dict = field(default_factory=dict)
 
 
 class Workload:
     name: str
+    #: ops of every pass
     ops: tuple[str, ...]
-    #: ops whose kernel derives its own canonical edge form from g.edges
-    derives_form: tuple[str, ...]
+    #: undirected kernels the traced run calls once after its traced pass:
+    #: measured per layer and checked, but in no timed pass. A run's time
+    #: budget holds a cold and a warm pass with only some of the kernels
+    #: (see README.md)
+    traced_ops: tuple[str, ...] = ()
 
     def load(self, spark) -> int:
         """Setup's input load: read the inputs and count rows."""
         raise NotImplementedError
+
+    def make_graph(self, spark):
+        """The workload's input → an interned ``Graph``."""
+        raise NotImplementedError
+
+    def build(self, ctx, out: PassOutput):
+        """The ``build`` op; returns the graph."""
+        with ctx.span("build"):
+            g = self.make_graph(ctx.spark)
+        out.values["graph"] = (g.num_vertices, g.num_edge_rows)
+        out.done.append("build")
+        return g
 
     def run_pass(self, ctx, k: int, out: PassOutput):
         """Issue the pass's engine calls; returns the graph (the caller
@@ -90,17 +109,107 @@ class Workload:
     def pagerank_oracle(self) -> np.ndarray:
         return oracle.pagerank(self.edges.src, self.edges.dst, self.edges.n)
 
+    @functools.cached_property
+    def undirected(self):
+        es = self.edges
+        return oracle.undirected(es.src, es.dst, es.n)
+
+    @functools.cached_property
+    def components_oracle(self) -> tuple[np.ndarray, np.ndarray]:
+        return oracle.components(self.undirected)
+
+    @functools.cached_property
+    def coreness_oracle(self) -> np.ndarray:
+        return oracle.coreness(self.undirected)
+
+    @functools.cached_property
+    def triangle_oracle(self) -> int:
+        return oracle.triangle_total(self.undirected)
+
+    def run_undirected(self, ctx, g, out: PassOutput, ops) -> None:
+        """The undirected kernels among ``ops``, in that order. Each
+        output is collected as ``(name, id, ...)`` rows."""
+        from propagon_spark.graph.components import connected_components
+        from propagon_spark.graph.kcore import kcore
+        from propagon_spark.graph.lpa import label_propagation
+        from propagon_spark.graph.triangles import triangle_total
+
+        calls = {
+            "components": lambda: connected_components(
+                g, progress=ctx.iteration_hook("components")
+            ),
+            "lpa": lambda: label_propagation(g, max_rounds=LPA_ROUNDS),
+            "kcore": lambda: kcore(g),
+        }
+        for op in ops:
+            if op == "triangles":
+                with ctx.span(op):
+                    out.values[op] = triangle_total(g)
+            elif op in calls:
+                with ctx.span(op):
+                    df = calls[op]()
+                    ctx.set_group(op)
+                    out.values[op] = df.toPandas()
+            else:
+                continue
+            out.done.append(op)
+
+    def check_undirected(self, out: PassOutput) -> list[str]:
+        """Checks of the undirected kernels' outputs. Interned ids are
+        order-preserving, so a vertex's engine id is its oracle index;
+        rows are put in id order after checking that every vertex appears
+        once under its own name."""
+        es = self.edges
+        comp, size = self.components_oracle
+        bad = []
+
+        def by_id(pdf):
+            ids = pdf["id"].to_numpy().astype(np.int64)
+            if not np.array_equal(np.sort(ids), np.arange(es.n)):
+                return None
+            pdf = pdf.iloc[np.argsort(ids)]
+            if not np.array_equal(pdf["name"].to_numpy().astype(str), self.names):
+                return None
+            return pdf
+
+        if "components" in out.done:
+            pdf = by_id(out.values["components"])
+            if pdf is None or not (
+                np.array_equal(pdf["component"].to_numpy(), comp)
+                and np.array_equal(pdf["component_size"].to_numpy(), size)
+            ):
+                bad.append("components")
+        if "lpa" in out.done:
+            # a label is a vertex of the same component
+            pdf = by_id(out.values["lpa"])
+            labels = None if pdf is None else pdf["label"].to_numpy().astype(np.int64)
+            if labels is None or not (
+                np.all((labels >= 0) & (labels < es.n))
+                and np.array_equal(comp[labels], comp)
+            ):
+                bad.append("lpa")
+        if "kcore" in out.done:
+            pdf = by_id(out.values["kcore"])
+            if pdf is None or not np.array_equal(
+                pdf["coreness"].to_numpy(), self.coreness_oracle
+            ):
+                bad.append("kcore")
+        if "triangles" in out.done and out.values["triangles"] != self.triangle_oracle:
+            bad.append("triangles")
+        return bad
+
 
 class RepoPagerank(Workload):
     name = "repo_pagerank"
-    ops = ("build", "pagerank", "output", "triangles")
-    derives_form = ("pagerank", "triangles")
+    ops = ("build", "pagerank", "output", "components", "triangles")
+    traced_ops = ("lpa",)
 
     def __init__(self, seed: int, data_dir: str):
         table = gen.repo_table(seed, 1, SHAPE)
         self.repo_path = os.path.join(data_dir, "repo_table")
         gen.write_repo_parquet(table, seed, self.repo_path)
         self.edges = gen.co_commit_edges(table)
+        self.names = self.edges.names
         self.out_dir = os.path.join(data_dir, "scores")
 
     def load(self, spark) -> int:
@@ -108,23 +217,17 @@ class RepoPagerank(Workload):
 
         return load_repo_table(spark, self.repo_path).count()
 
-    @functools.cached_property
-    def triangle_oracle(self) -> int:
-        es = self.edges
-        return oracle.triangle_total(oracle.undirected(es.src, es.dst, es.n))
-
-    def run_pass(self, ctx, k: int, out: PassOutput):
+    def make_graph(self, spark):
         from propagon_spark.graph.core import Graph
-        from propagon_spark.graph.pagerank import pagerank
-        from propagon_spark.graph.triangles import triangle_total
         from propagon_spark.sources.repo_table import derive_edges, load_repo_table
 
-        spark = ctx.spark
-        with ctx.span("build"):
-            repo = load_repo_table(spark, self.repo_path, columns=("repo", "path", "commit"))
-            g = Graph.from_edges(derive_edges(repo))
-        out.values["graph"] = (g.num_vertices, g.num_edge_rows)
-        out.done.append("build")
+        repo = load_repo_table(spark, self.repo_path, columns=("repo", "path", "commit"))
+        return Graph.from_edges(derive_edges(repo))
+
+    def run_pass(self, ctx, k: int, out: PassOutput):
+        from propagon_spark.graph.pagerank import pagerank
+
+        g = self.build(ctx, out)
 
         with ctx.span("pagerank"):
             r = pagerank(g, tol=PAGERANK_TOL, progress=ctx.iteration_hook("pagerank"))
@@ -139,9 +242,7 @@ class RepoPagerank(Workload):
         out.values["output"] = path
         out.done.append("output")
 
-        with ctx.span("triangles"):
-            out.values["triangles"] = triangle_total(g)
-        out.done.append("triangles")
+        self.run_undirected(ctx, g, out, self.ops)
         return g
 
     def check(self, out: PassOutput) -> list[str]:
@@ -167,18 +268,18 @@ class RepoPagerank(Workload):
             pdf = out.values["pagerank"]
             if names != list(pdf["name"]) or scores != list(pdf["score"]):
                 bad.append("output")
-        if "triangles" in out.done and out.values["triangles"] != self.triangle_oracle:
-            bad.append("triangles")
-        return bad
+        return bad + self.check_undirected(out)
 
 
 class JoinLoops(Workload):
     name = "join_loops"
     ops = ("build", "pagerank", "checkpoint", "hits")
-    derives_form = ("pagerank", "hits")
+    traced_ops = ("kcore",)
 
     def __init__(self, seed: int, data_dir: str):
         self.edges = gen.co_commit_edges(gen.repo_table(seed, 2, SHAPE))
+        # from_dense_ids names each vertex after its id
+        self.names = np.arange(self.edges.n).astype(str)
         self.edge_path = os.path.join(data_dir, "dense_edges")
         gen.write_dense_edges(self.edges, self.edge_path)
         self.ckpt_dir = os.path.join(data_dir, "fit_checkpoints")
@@ -190,19 +291,16 @@ class JoinLoops(Workload):
     def hits_oracle(self) -> tuple[np.ndarray, np.ndarray]:
         return oracle.hits(self.edges.src, self.edges.dst, self.edges.n, HITS_ITERATIONS)
 
-    def run_pass(self, ctx, k: int, out: PassOutput):
+    def make_graph(self, spark):
         from propagon_spark.graph.core import Graph
+
+        return Graph.from_dense_ids(spark.read.parquet(self.edge_path), weight="weight")
+
+    def run_pass(self, ctx, k: int, out: PassOutput):
         from propagon_spark.graph.hits import hits
         from propagon_spark.graph.pagerank import pagerank
 
-        spark = ctx.spark
-        for i in range(BUILDS):
-            if i:
-                g.unpersist()
-            with ctx.span("build"):
-                g = Graph.from_dense_ids(spark.read.parquet(self.edge_path), weight="weight")
-        out.values["graph"] = (g.num_vertices, g.num_edge_rows)
-        out.done.append("build")
+        g = self.build(ctx, out)
 
         run_id = f"pass{k}"
         with ctx.span("pagerank"):
@@ -253,7 +351,7 @@ class JoinLoops(Workload):
                 if not oracle.close(pdf["score"].to_numpy()[np.argsort(ids)], want, HITS_ERR):
                     bad.append("hits")
                     break
-        return bad
+        return bad + self.check_undirected(out)
 
 
 def _checkpoint_ok(root: str, metrics: list[dict]) -> bool:
