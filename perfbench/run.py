@@ -3,10 +3,10 @@
     python3 perfbench/run.py --workload repo_pagerank --seed 1 --seconds 10 --trace 0
 
 Run from the repository root. The run generates its inputs from the seed,
-starts one Spark driver on ``local[4]``, sets up (session start + input
-load, several times), makes one cold pass over the workload's engine calls
-in the fresh JVM, then warm passes until ``--seconds`` have elapsed. It
-checks every output against the oracles, prints a table of every metric
+starts one Spark driver on ``local[4]`` and loads the inputs, makes one
+cold pass over the workload's engine calls in the fresh JVM, then warm
+passes until ``--seconds`` have elapsed, then sets up again (session
+restart + input load) several times in the warm JVM. It checks every output against the oracles, prints a table of every metric
 with its unit and sample count, and prints one JSON object as the last
 line of standard output: end-to-end metrics with ``--trace 0``, per-layer
 metrics with ``--trace 1``. See README.md.
@@ -32,6 +32,9 @@ import tracing as tr  # noqa: E402
 from workloads import WORKLOADS, PassOutput, du  # noqa: E402
 
 CORES = 4
+#: setups timed after the warm passes. Timed before them, each restart
+#: ran faster than the one before it (the JIT was still compiling the load
+#: path), and setup_s spread by 0.3-0.44 of its median across seeds
 SETUPS = 5
 #: driver heap, fixed at launch (-Xms = -Xmx): a heap left to grow from
 #: the JVM's default start size expands at GC-timing-dependent moments,
@@ -203,9 +206,8 @@ def pass_metrics(run: Run, out: PassOutput, span: tr.Span) -> dict:
 def per_layer(
     run: Run, out: PassOutput, counters: dict, start_s: float, canon_calls: int
 ) -> dict:
-    """Per-layer metrics of the traced pass. A layer that does not run on
-    this workload, or whose call failed (``failed`` reports it), is left
-    out."""
+    """Per-layer metrics of the traced pass and the traced-only calls. A
+    layer whose call failed (``failed`` reports it) is left out."""
     sp = {s.name: s for s in run.tracer.spans}  # the last span of each name
 
     def c(*groups) -> tr.GroupCounters:
@@ -237,11 +239,13 @@ def per_layer(
         m["core.spill_bytes"] = b.spill_bytes
         m["core.gc_s"] = b.gc_s
         m["core.util"] = util("build")
-    if "pagerank" in out.done:
-        fit = out.values["pagerank_fit"]
-        turns = run.iter_metrics["pagerank"]
+    for op in ("pagerank", "pagerank_alt"):
+        if op not in out.done:
+            continue
+        fit = out.values[op + "_fit"]
+        turns = run.iter_metrics[op]
         secs = [r["seconds"] for r in turns]
-        later = c("pagerank.iter")  # jobs of every turn after the first
+        later = c(op + ".iter")  # jobs of every turn after the first
         t = fit.timings
         if t["kernel"] == "csr":
             m.update(
@@ -255,7 +259,7 @@ def per_layer(
                     "pagerank_csr.iter_s_p50": float(np.percentile(secs, 50)),
                     "pagerank_csr.iter_s_p95": float(np.percentile(secs, 95)),
                     "pagerank_csr.jobs_per_iter": later.jobs / max(1, len(turns) - 1),
-                    "pagerank_csr.util": util("pagerank"),
+                    "pagerank_csr.util": util(op),
                 }
             )
         else:
@@ -271,12 +275,12 @@ def per_layer(
                     "pagerank_join.jobs_per_turn": later.jobs / max(1, len(turns) - 1),
                     "pagerank_join.shuffle_bytes_per_iter": later.shuffle_write_bytes
                     / max(1, fit.iterations - turns[0]["steps"]),
-                    "pagerank_join.spill_bytes": c("pagerank", "pagerank.iter").spill_bytes,
-                    "pagerank_join.util": util("pagerank"),
+                    "pagerank_join.spill_bytes": c(op, op + ".iter").spill_bytes,
+                    "pagerank_join.util": util(op),
                 }
             )
     if "checkpoint" in out.done:
-        root = out.values["checkpoint"]
+        root = out.values["checkpoint"][0]
         m["checkpoint.saves"] = len([f for f in os.listdir(root) if f.startswith("manifest_")])
         m["checkpoint.bytes"] = du(root)
     if "hits" in out.done:
@@ -410,19 +414,12 @@ def main(argv=None) -> int:
         stats = wl.edges.stats()
         outputs: list[PassOutput] = []
 
-        # the first setup launches the JVM; the others stop the
-        # SparkContext and start a new one in the same JVM
-        setup, starts = [], []
-        for i in range(SETUPS):
-            if i:
-                run.stop_session()
-            t0 = time.monotonic()
-            starts.append(run.start_session())
-            wl.load(run.spark)
-            setup.append(time.monotonic() - t0)
-            if sampler is None:
-                sampler = tr.RssSampler(run.jvm.pid)
-                sampler.start()
+        t0 = time.monotonic()
+        run.start_session()
+        wl.load(run.spark)
+        launch_s = time.monotonic() - t0
+        sampler = tr.RssSampler(run.jvm.pid)
+        sampler.start()
 
         cold, g = run_pass(run, wl, 0, outputs)
         if g is not None:
@@ -436,6 +433,16 @@ def main(argv=None) -> int:
                 g.unpersist()
             warm.append(pass_metrics(run, outputs[-1], span))
 
+        # each setup stops the SparkContext and starts a new one in the
+        # same, now warm, JVM
+        setup, starts = [], []
+        for _ in range(SETUPS):
+            run.stop_session()
+            t0 = time.monotonic()
+            starts.append(run.start_session())
+            wl.load(run.spark)
+            setup.append(time.monotonic() - t0)
+
         layers = None
         if args.trace:
             run.stop_session()
@@ -443,10 +450,10 @@ def main(argv=None) -> int:
             run.tracer.sc = run.spark.sparkContext
             with tr.count_calls("propagon_spark", "propagon_spark.canon", CANON_FORMS) as calls:
                 traced, g = run_pass(run, wl, len(outputs), outputs)
-                if g is not None and wl.traced_ops:
+                if g is not None:
                     outputs[-1].ops += wl.traced_ops
                     try:
-                        wl.run_undirected(run, g, outputs[-1], wl.traced_ops)
+                        wl.run_ops(run, g, len(outputs) - 1, outputs[-1], wl.traced_ops)
                     except Exception:
                         traceback.print_exc()
             if g is not None:
@@ -497,6 +504,7 @@ def main(argv=None) -> int:
         vals = e2e_samples[name]
         print(f"{name:<40}{statistics.median(vals) if vals else float('nan'):>16.4f}  {unit:<6}{len(vals):>3}")
     print(f"{'failed_ratio':<40}{failed / attempted:>16.4f}  ratio {attempted:>3}")
+    print(f"{'launch_s (JVM launch + input load)':<40}{launch_s:>16.4f}  s       1")
     if layers is not None:
         print("per-layer (traced pass):")
         for name, unit in PER_LAYER.items():

@@ -12,14 +12,16 @@ after the timed passes, so no oracle work lands in a timed region.
   the sorted scores → ``connected_components`` → ``triangle_total``.
   Derivation, interning, ``pagerank_csr``, the min-label rounds and the
   triangle wedge join do the work; the DataFrame join loop is bypassed.
-  The traced run adds ``label_propagation(max_rounds=LPA_ROUNDS)``.
 - ``join_loops``: a dense-id edge file (every vertex is an endpoint, so
   no sinks) → ``Graph.from_dense_ids`` → ``pagerank(impl="join",
   tol=1e-6)`` with a durable checkpoint every 5 iterations →
   ``hits(iterations=2)``. Per-job fixed cost, lineage truncation and
   checkpoint writes do the work; derivation, interning and CSR are
-  bypassed. The traced run adds ``kcore`` after its traced pass (see
-  ``traced_ops``).
+  bypassed.
+
+After its traced pass, the traced run calls every layer the workload's
+passes do not (``traced_ops``) once on the same graph, so each traced run
+measures every layer.
 
 Both graphs are symmetric co-commit graphs without self-loops, so the
 undirected kernels run on either as they are.
@@ -33,6 +35,7 @@ import os
 from dataclasses import dataclass, field
 
 import numpy as np
+import pandas as pd
 import pyarrow.parquet as pq
 
 import gen
@@ -44,6 +47,7 @@ HITS_ITERATIONS = 2
 HITS_ERR = 1e-9
 CHECKPOINT_INTERVAL = 5
 LPA_ROUNDS = 5
+UNDIRECTED = ("components", "lpa", "triangles", "kcore")
 
 #: ~5.3k vertices / ~165k edge rows: small enough that a run fits its time
 #: budget on 4 cores, where per-job fixed cost already dominates every
@@ -74,11 +78,16 @@ class Workload:
     name: str
     #: ops of every pass
     ops: tuple[str, ...]
-    #: undirected kernels the traced run calls once after its traced pass:
-    #: measured per layer and checked, but in no timed pass. A run's time
-    #: budget holds a cold and a warm pass with only some of the kernels
-    #: (see README.md)
-    traced_ops: tuple[str, ...] = ()
+    #: ``impl`` of the pass's ``pagerank`` fit
+    impl: str
+    #: layers the traced run calls once after its traced pass, on the
+    #: pass's graph: every layer op the passes do not call, so the traced
+    #: run measures every layer on every workload. ``pagerank_alt`` fits
+    #: with the kernel the pass does not use. These calls are measured per
+    #: layer and checked, but are in no timed pass (see README.md)
+    traced_ops: tuple[str, ...]
+    names: np.ndarray
+    data_dir: str
 
     def load(self, spark) -> int:
         """Setup's input load: read the inputs and count rows."""
@@ -99,15 +108,114 @@ class Workload:
     def run_pass(self, ctx, k: int, out: PassOutput):
         """Issue the pass's engine calls; returns the graph (the caller
         releases it)."""
-        raise NotImplementedError
+        g = self.build(ctx, out)
+        self.run_ops(ctx, g, k, out, self.ops)
+        return g
+
+    def run_ops(self, ctx, g, k: int, out: PassOutput, ops) -> None:
+        """Call the engine for each op of ``ops`` in order. ``checkpoint``
+        is written by a join-kernel fit, so it is no call of its own."""
+        from propagon_spark.graph.hits import hits
+
+        for op in ops:
+            if op == "pagerank":
+                self.fit(ctx, g, k, out, op, self.impl)
+            elif op == "pagerank_alt":
+                self.fit(ctx, g, k, out, op, "csr" if self.impl == "join" else "join")
+            elif op == "output":
+                path = os.path.join(self.data_dir, "scores", f"pass{k}")
+                with ctx.span(op):
+                    out.values["pagerank_fit"].scores.write.mode("overwrite").parquet(path)
+                out.values[op] = path
+                out.done.append(op)
+            elif op == "hits":
+                with ctx.span(op):
+                    h = hits(g, iterations=HITS_ITERATIONS, progress=ctx.iteration_hook(op))
+                    ctx.set_group(op)
+                    out.values[op] = (h.authorities.toPandas(), h.hubs.toPandas())
+                out.done.append(op)
+            elif op in UNDIRECTED:
+                self.run_undirected(ctx, g, out, op)
+
+    def fit(self, ctx, g, k: int, out: PassOutput, op: str, impl: str) -> None:
+        """``pagerank(tol=1e-6)`` with ``impl``, its scores collected. A
+        join-kernel fit also saves a durable checkpoint every
+        ``CHECKPOINT_INTERVAL`` iterations (the ``checkpoint`` op)."""
+        from propagon_spark.graph.pagerank import pagerank
+
+        kw = {}
+        if impl == "join":
+            kw = {
+                "checkpoint_dir": os.path.join(self.data_dir, "fit_checkpoints"),
+                "run_id": f"pass{k}-{op}",
+                "checkpoint_interval": CHECKPOINT_INTERVAL,
+            }
+        with ctx.span(op):
+            r = pagerank(g, impl=impl, tol=PAGERANK_TOL, progress=ctx.iteration_hook(op), **kw)
+            ctx.set_group(op)
+            out.values[op] = r.scores.toPandas()
+        out.values[op + "_fit"] = r
+        out.done.append(op)
+        if kw:
+            out.values["checkpoint"] = (
+                os.path.join(kw["checkpoint_dir"], kw["run_id"]),
+                r.metrics,
+            )
+            out.done.append("checkpoint")
+
+    @functools.cached_property
+    def name_index(self) -> pd.Index:
+        return pd.Index(self.names)
+
+    def by_name(self, names) -> np.ndarray | None:
+        """Row order that puts rows keyed by vertex name in oracle index
+        order, or None unless every vertex appears exactly once."""
+        idx = self.name_index.get_indexer(np.asarray(names).astype(str))
+        if not np.array_equal(np.sort(idx), np.arange(self.edges.n)):
+            return None
+        return np.argsort(idx)
 
     def check(self, out: PassOutput) -> list[str]:
         """Names of the ops whose output fails its oracle check."""
-        raise NotImplementedError
+        es = self.edges
+        bad = []
+        if "build" in out.done and out.values["graph"] != (es.n, len(es.src)):
+            bad.append("build")
+        for op in ("pagerank", "pagerank_alt"):
+            if op in out.done:
+                pdf = out.values[op]
+                order = self.by_name(pdf["name"])
+                if order is None or not oracle.close(
+                    pdf["score"].to_numpy()[order], self.pagerank_oracle, PAGERANK_ERR
+                ):
+                    bad.append(op)
+        if "checkpoint" in out.done and not _checkpoint_ok(*out.values["checkpoint"]):
+            bad.append("checkpoint")
+        if "output" in out.done:
+            files = sorted(glob.glob(os.path.join(out.values["output"], "*.parquet")))
+            written = [pq.read_table(f).to_pandas() for f in files]
+            names = [n for w in written for n in w["name"]]
+            scores = [s for w in written for s in w["score"]]
+            pdf = out.values["pagerank"]
+            if names != list(pdf["name"]) or scores != list(pdf["score"]):
+                bad.append("output")
+        if "hits" in out.done:
+            for pdf, want in zip(out.values["hits"], self.hits_oracle):
+                order = self.by_name(pdf["name"])
+                if order is None or not oracle.close(
+                    pdf["score"].to_numpy()[order], want, HITS_ERR
+                ):
+                    bad.append("hits")
+                    break
+        return bad + self.check_undirected(out)
 
     @functools.cached_property
     def pagerank_oracle(self) -> np.ndarray:
         return oracle.pagerank(self.edges.src, self.edges.dst, self.edges.n)
+
+    @functools.cached_property
+    def hits_oracle(self) -> tuple[np.ndarray, np.ndarray]:
+        return oracle.hits(self.edges.src, self.edges.dst, self.edges.n, HITS_ITERATIONS)
 
     @functools.cached_property
     def undirected(self):
@@ -126,33 +234,27 @@ class Workload:
     def triangle_oracle(self) -> int:
         return oracle.triangle_total(self.undirected)
 
-    def run_undirected(self, ctx, g, out: PassOutput, ops) -> None:
-        """The undirected kernels among ``ops``, in that order. Each
-        output is collected as ``(name, id, ...)`` rows."""
+    def run_undirected(self, ctx, g, out: PassOutput, op: str) -> None:
+        """One undirected kernel. Its output is collected as
+        ``(name, id, ...)`` rows."""
         from propagon_spark.graph.components import connected_components
         from propagon_spark.graph.kcore import kcore
         from propagon_spark.graph.lpa import label_propagation
         from propagon_spark.graph.triangles import triangle_total
 
-        calls = {
-            "components": lambda: connected_components(
-                g, progress=ctx.iteration_hook("components")
-            ),
-            "lpa": lambda: label_propagation(g, max_rounds=LPA_ROUNDS),
-            "kcore": lambda: kcore(g),
-        }
-        for op in ops:
+        with ctx.span(op):
             if op == "triangles":
-                with ctx.span(op):
-                    out.values[op] = triangle_total(g)
-            elif op in calls:
-                with ctx.span(op):
-                    df = calls[op]()
-                    ctx.set_group(op)
-                    out.values[op] = df.toPandas()
+                out.values[op] = triangle_total(g)
             else:
-                continue
-            out.done.append(op)
+                if op == "components":
+                    df = connected_components(g, progress=ctx.iteration_hook(op))
+                elif op == "lpa":
+                    df = label_propagation(g, max_rounds=LPA_ROUNDS)
+                else:
+                    df = kcore(g)
+                ctx.set_group(op)
+                out.values[op] = df.toPandas()
+        out.done.append(op)
 
     def check_undirected(self, out: PassOutput) -> list[str]:
         """Checks of the undirected kernels' outputs. Interned ids are
@@ -202,7 +304,8 @@ class Workload:
 class RepoPagerank(Workload):
     name = "repo_pagerank"
     ops = ("build", "pagerank", "output", "components", "triangles")
-    traced_ops = ("lpa",)
+    impl = "auto"  # picks the CSR kernel at this size
+    traced_ops = ("pagerank_alt", "checkpoint", "hits", "lpa", "kcore")
 
     def __init__(self, seed: int, data_dir: str):
         table = gen.repo_table(seed, 1, SHAPE)
@@ -210,7 +313,7 @@ class RepoPagerank(Workload):
         gen.write_repo_parquet(table, seed, self.repo_path)
         self.edges = gen.co_commit_edges(table)
         self.names = self.edges.names
-        self.out_dir = os.path.join(data_dir, "scores")
+        self.data_dir = data_dir
 
     def load(self, spark) -> int:
         from propagon_spark.sources.repo_table import load_repo_table
@@ -224,134 +327,33 @@ class RepoPagerank(Workload):
         repo = load_repo_table(spark, self.repo_path, columns=("repo", "path", "commit"))
         return Graph.from_edges(derive_edges(repo))
 
-    def run_pass(self, ctx, k: int, out: PassOutput):
-        from propagon_spark.graph.pagerank import pagerank
-
-        g = self.build(ctx, out)
-
-        with ctx.span("pagerank"):
-            r = pagerank(g, tol=PAGERANK_TOL, progress=ctx.iteration_hook("pagerank"))
-            ctx.set_group("pagerank")
-            out.values["pagerank"] = r.scores.toPandas()
-        out.values["pagerank_fit"] = r
-        out.done.append("pagerank")
-
-        path = os.path.join(self.out_dir, f"pass{k}")
-        with ctx.span("output"):
-            r.scores.write.mode("overwrite").parquet(path)
-        out.values["output"] = path
-        out.done.append("output")
-
-        self.run_undirected(ctx, g, out, self.ops)
-        return g
-
-    def check(self, out: PassOutput) -> list[str]:
-        es = self.edges
-        bad = []
-        if "build" in out.done and out.values["graph"] != (es.n, len(es.src)):
-            bad.append("build")
-        if "pagerank" in out.done:
-            want = self.pagerank_oracle
-            pdf = out.values["pagerank"]
-            got = pdf["score"].to_numpy()[np.argsort(pdf["name"].to_numpy())]
-            names = np.sort(pdf["name"].to_numpy().astype(str))
-            if not (
-                np.array_equal(names, es.names)
-                and oracle.close(got, want, PAGERANK_ERR)
-            ):
-                bad.append("pagerank")
-        if "output" in out.done:
-            files = sorted(glob.glob(os.path.join(out.values["output"], "*.parquet")))
-            written = [pq.read_table(f).to_pandas() for f in files]
-            names = [n for w in written for n in w["name"]]
-            scores = [s for w in written for s in w["score"]]
-            pdf = out.values["pagerank"]
-            if names != list(pdf["name"]) or scores != list(pdf["score"]):
-                bad.append("output")
-        return bad + self.check_undirected(out)
-
 
 class JoinLoops(Workload):
     name = "join_loops"
     ops = ("build", "pagerank", "checkpoint", "hits")
-    traced_ops = ("kcore",)
+    impl = "join"
+    traced_ops = ("pagerank_alt", "output", "components", "lpa", "triangles", "kcore")
 
     def __init__(self, seed: int, data_dir: str):
-        self.edges = gen.co_commit_edges(gen.repo_table(seed, 2, SHAPE))
+        table = gen.repo_table(seed, 2, SHAPE)
+        # the traced run's derivation probe reads the table the edge
+        # file was derived from
+        self.repo_path = os.path.join(data_dir, "repo_table")
+        gen.write_repo_parquet(table, seed, self.repo_path)
+        self.edges = gen.co_commit_edges(table)
         # from_dense_ids names each vertex after its id
         self.names = np.arange(self.edges.n).astype(str)
         self.edge_path = os.path.join(data_dir, "dense_edges")
         gen.write_dense_edges(self.edges, self.edge_path)
-        self.ckpt_dir = os.path.join(data_dir, "fit_checkpoints")
+        self.data_dir = data_dir
 
     def load(self, spark) -> int:
         return spark.read.parquet(self.edge_path).count()
-
-    @functools.cached_property
-    def hits_oracle(self) -> tuple[np.ndarray, np.ndarray]:
-        return oracle.hits(self.edges.src, self.edges.dst, self.edges.n, HITS_ITERATIONS)
 
     def make_graph(self, spark):
         from propagon_spark.graph.core import Graph
 
         return Graph.from_dense_ids(spark.read.parquet(self.edge_path), weight="weight")
-
-    def run_pass(self, ctx, k: int, out: PassOutput):
-        from propagon_spark.graph.hits import hits
-        from propagon_spark.graph.pagerank import pagerank
-
-        g = self.build(ctx, out)
-
-        run_id = f"pass{k}"
-        with ctx.span("pagerank"):
-            r = pagerank(
-                g,
-                impl="join",
-                tol=PAGERANK_TOL,
-                checkpoint_dir=self.ckpt_dir,
-                run_id=run_id,
-                checkpoint_interval=CHECKPOINT_INTERVAL,
-                progress=ctx.iteration_hook("pagerank"),
-            )
-            ctx.set_group("pagerank")
-            out.values["pagerank"] = r.scores.toPandas()
-        out.values["pagerank_fit"] = r
-        out.values["checkpoint"] = os.path.join(self.ckpt_dir, run_id)
-        out.done += ["pagerank", "checkpoint"]
-
-        with ctx.span("hits"):
-            h = hits(g, iterations=HITS_ITERATIONS, progress=ctx.iteration_hook("hits"))
-            ctx.set_group("hits")
-            out.values["hits"] = (h.authorities.toPandas(), h.hubs.toPandas())
-        out.done.append("hits")
-        return g
-
-    def check(self, out: PassOutput) -> list[str]:
-        es = self.edges
-        bad = []
-        if "build" in out.done and out.values["graph"] != (es.n, len(es.src)):
-            bad.append("build")
-        if "pagerank" in out.done:
-            want = self.pagerank_oracle
-            pdf = out.values["pagerank"]
-            ids = pdf["name"].astype(np.int64).to_numpy()
-            got = pdf["score"].to_numpy()[np.argsort(ids)]
-            if not (
-                np.array_equal(np.sort(ids), np.arange(es.n))
-                and oracle.close(got, want, PAGERANK_ERR)
-            ):
-                bad.append("pagerank")
-        if "checkpoint" in out.done and not _checkpoint_ok(
-            out.values["checkpoint"], out.values["pagerank_fit"].metrics
-        ):
-            bad.append("checkpoint")
-        if "hits" in out.done:
-            for pdf, want in zip(out.values["hits"], self.hits_oracle):
-                ids = pdf["name"].astype(np.int64).to_numpy()
-                if not oracle.close(pdf["score"].to_numpy()[np.argsort(ids)], want, HITS_ERR):
-                    bad.append("hits")
-                    break
-        return bad + self.check_undirected(out)
 
 
 def _checkpoint_ok(root: str, metrics: list[dict]) -> bool:
