@@ -15,33 +15,32 @@ rounds of one shuffle each; each round also halves distances by
 propagating over the label graph (pointer-doubling style shortcut: after
 each round, vertices adopt the label *of their label*), giving
 O(log diameter) behavior on long chains.
+
+Each round is one :func:`~propagon_spark.plans.iterate.fixpoint` turn:
+one job checkpoints the labels and observes how many changed.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from propagon_spark.canon import symmetrize
 from propagon_spark.graph.core import Graph
-from propagon_spark.plans.iterate import truncate_lineage, truncate_lineage_lazy
-from propagon_spark.progress import as_progress
-
-# deserialized columnar cache: the serialized level costs ~1.5x to build
-# and ~3.5x per re-read at 2e8 rows (measured; see BENCH/BASELINE.md) -
-# iterative kernels re-read their persisted frames every pass
-_STORAGE = StorageLevel.MEMORY_AND_DISK_DESER
+from propagon_spark.plans.iterate import (
+    STORAGE, count_changed, fixpoint, truncate_lineage,
+)
+from propagon_spark.progress import Progress, as_progress
 
 
-def _min_label_fixpoint(g: Graph, prog=None) -> DataFrame:
+def _min_label_fixpoint(g: Graph, prog: Progress) -> DataFrame:
     """Return (id, label) with label = min vertex id reachable (undirected)."""
     nparts = g.edges.rdd.getNumPartitions()
     sym = (
         symmetrize(g.edges.select("src", "dst"))
         .distinct()
         .repartition(nparts, "src")
-        .persist(_STORAGE)
+        .persist(STORAGE)
     )
     sym.count()
 
@@ -51,11 +50,7 @@ def _min_label_fixpoint(g: Graph, prog=None) -> DataFrame:
         .transform(truncate_lineage)
     )
 
-    rnd = 0
-    if prog is not None:
-        prog.start("components")
-    while True:
-        rnd += 1
+    def step(labels: DataFrame):
         # gather: min label over in-neighbors (sym is symmetric, so this is
         # the full undirected neighborhood)
         nbr_min = (
@@ -75,8 +70,9 @@ def _min_label_fixpoint(g: Graph, prog=None) -> DataFrame:
         lbl_of_lbl = labels.select(
             F.col("id").alias("l1"), F.col("label").alias("ll")
         )
-        obs = Observation()
-        updated = (
+        # labels feeds three branches of this plan: the driver truncates
+        # lineage every round, else the logical plan grows exponentially
+        nxt = (
             updated.join(lbl_of_lbl, "l1", "left")
             .select(
                 "id",
@@ -84,28 +80,13 @@ def _min_label_fixpoint(g: Graph, prog=None) -> DataFrame:
                 F.least(F.col("l1"), F.coalesce("ll", F.col("l1"))).alias("label"),
             )
             .repartition(nparts, "id")
-            .observe(
-                obs,
-                F.sum(
-                    F.when(F.col("label") != F.col("old"), 1).otherwise(0)
-                ).alias("changed"),
-            )
-            .drop("old")
-            # labels feeds three branches of this plan: truncate lineage
-            # every round or the logical plan grows exponentially; the
-            # changed-count rides the same job as an observed metric
-            .transform(truncate_lineage)
         )
-        changed = obs.get["changed"]
-        labels = updated
-        if prog is not None:
-            prog.iteration("components", {"round": rnd, "changed": int(changed)})
-        if changed == 0:
-            break
+        return nxt, {"changed": count_changed("label", "old")}
 
-    if prog is not None:
-        prog.finish()
-    sym.unpersist()
+    labels, _ = fixpoint(
+        labels, step, phase="components", counter="round", prog=prog,
+        done=lambda row: row["changed"] == 0, release=[sym],
+    )
     return labels
 
 

@@ -22,10 +22,10 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from propagon_spark.errors import EmptyDatasetError
 from propagon_spark.ids import build_vocab
+from propagon_spark.plans.iterate import STORAGE
 
 
 @dataclass
@@ -81,7 +81,7 @@ class Graph:
         # derivations (the co-commit SELF-JOIN: measured 2x ~17s at sf0.1,
         # i.e. half of graph build), so materialize the normalized frame
         # once and release it as soon as the interned edges are counted.
-        raw.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+        raw.persist(STORAGE)
 
         names = raw.select(F.col("src_name").alias("name")).unionAll(
             raw.select(F.col("dst_name").alias("name"))
@@ -114,7 +114,7 @@ class Graph:
             # deserialized columnar cache — every kernel re-reads this
             # frame; the serialized level costs ~3.5x per scan at 2e8 rows
             # (measured)
-            e.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+            e.persist(STORAGE)
             m = e.count()
         finally:
             raw.unpersist(blocking=False)
@@ -127,12 +127,6 @@ class Graph:
         )
         g._persisted = [e]
         return g
-
-    @classmethod
-    def from_id_edges(cls, edges: DataFrame, weight: str | None = None) -> "Graph":
-        """Build from an already-long-typed edge frame; vocab is identity
-        (name = string of id). Convenience for tests/benchmarks."""
-        return cls.from_edges(edges, weight=weight)
 
     @classmethod
     def from_dense_ids(
@@ -171,7 +165,7 @@ class Graph:
         # same stable src hash partitioning + deserialized cache as
         # from_edges — kernels rely on both
         e = e.repartition(num_partitions, "src")
-        e.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+        e.persist(STORAGE)
         m = e.count()
         if m == 0:
             raise EmptyDatasetError("empty edge dataset")

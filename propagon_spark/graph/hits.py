@@ -8,13 +8,14 @@ L1 change of both vectors; a collapsed normalization (total ≤ 0 / NaN) is
 a typed error (``hits.rs:165-170``).
 
 Spark shape: two scatter-gather join+aggs per iteration; the L1
-normalizers ride along as broadcast 1-row aggregates; one driver action
-per iteration for the tolerance check.
+normalizers ride along as broadcast 1-row aggregates; each iteration is
+one :func:`~propagon_spark.plans.iterate.fixpoint` turn, whose checkpoint
+job also observes the L1 change and both norms for the tolerance and
+collapse checks.
 """
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -23,7 +24,7 @@ from pyspark.sql import functions as F
 from propagon_spark.canon import dedup_edges
 from propagon_spark.errors import NumericError
 from propagon_spark.graph.core import Graph, sorted_scores
-from propagon_spark.plans.iterate import truncate_lineage, truncate_lineage_lazy
+from propagon_spark.plans.iterate import fixpoint, truncate_lineage
 from propagon_spark.progress import as_progress
 
 
@@ -49,10 +50,7 @@ def hits(
         "id", F.lit(1.0 / n).alias("a"), F.lit(1.0 / n).alias("h")
     ))
 
-    it = 0
-    prog.start("hits", total=iterations)
-    while it < iterations:
-        it += 1
+    def step(state: DataFrame):
         # a_raw[dst] = Σ h[src]
         a_raw = (
             edges.join(
@@ -84,40 +82,27 @@ def hits(
             .crossJoin(F.broadcast(h_tot))
             .select(
                 "id",
-                "a",
-                "h",
-                F.col("na"),
-                (F.coalesce("hr", F.lit(0.0)) / F.col("_ht")).alias("nh"),
+                F.col("na").alias("a"),
+                (F.coalesce("hr", F.lit(0.0)) / F.col("_ht")).alias("h"),
+                F.col("a").alias("old_a"),
+                F.col("h").alias("old_h"),
             )
-            .transform(truncate_lineage_lazy)
         )
-        agg = nxt.agg(
-            (
-                F.sum(F.abs(F.col("a") - F.col("na")))
-                + F.sum(F.abs(F.col("h") - F.col("nh")))
-            ).alias("change"),
-            F.sum("na").alias("asum"),
-            F.sum("nh").alias("hsum"),
-        ).first()
-        change = agg["change"]
-        if (
-            change is None
-            or not math.isfinite(change)
-            or agg["asum"] is None
-            or not math.isfinite(agg["asum"])
-            or agg["asum"] <= 0
-            or agg["hsum"] is None
-            or not math.isfinite(agg["hsum"])
-            or agg["hsum"] <= 0
-        ):
+        return nxt, {
+            "l1_delta": F.sum(F.abs(F.col("a") - F.col("old_a")))
+            + F.sum(F.abs(F.col("h") - F.col("old_h"))),
+            "_asum": F.sum("a"),
+            "_hsum": F.sum("h"),
+        }
+
+    def done(row: dict) -> bool:
+        if row["_asum"] <= 0 or row["_hsum"] <= 0:
             raise NumericError("hits iteration collapsed (no edges reachable?)")
-        state = nxt.select(
-            "id", F.col("na").alias("a"), F.col("nh").alias("h")
-        )
-        prog.iteration("hits", {"iteration": it, "l1_delta": change})
-        if change < tolerance:
-            break
-    prog.finish()
+        return row["l1_delta"] < tolerance
+
+    state, it = fixpoint(
+        state, step, phase="hits", done=done, max_turns=iterations, prog=prog
+    )
 
     named = g.with_names(state)
     return HitsResult(

@@ -32,18 +32,14 @@ on a cluster each empty level would be a wasted job).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from propagon_spark.canon import canonical_undirected, symmetrize
 from propagon_spark.graph.core import Graph
-from propagon_spark.plans.iterate import truncate_lineage
-
-# deserialized columnar cache: the serialized level costs ~1.5x to build
-# and ~3.5x per re-read at 2e8 rows (measured; see BENCH/BASELINE.md) -
-# iterative kernels re-read their persisted frames every pass
-_STORAGE = StorageLevel.MEMORY_AND_DISK_DESER
+from propagon_spark.plans.iterate import (
+    STORAGE, count_changed, fixpoint, truncate_lineage,
+)
 
 
 def kcore(g: Graph, method: str = "hindex") -> DataFrame:
@@ -75,17 +71,16 @@ def _kcore_hindex(g: Graph) -> DataFrame:
     the H-index of its neighbors' h values (max t s.t. ≥ t neighbors
     have h ≥ t), computed as ``max(least(h_nbr, rank))`` over the
     per-vertex descending sort — one shuffle join + one window sort per
-    round, all vertices in parallel, lineage truncated per round. The
+    round, all vertices in parallel, each round one
+    :func:`~propagon_spark.plans.iterate.fixpoint` turn (one job). The
     sequence is monotonically non-increasing and lower-bounded by the
     coreness, so the changed-count Observation hitting zero IS the
     fixpoint."""
-    from pyspark.sql import Observation, Window
-
     nparts = g.edges.rdd.getNumPartitions()
     sym = (
         symmetrize(canonical_undirected(g.edges))
         .repartition(nparts, "src")
-        .persist(_STORAGE)
+        .persist(STORAGE)
     )
     sym.count()
 
@@ -99,7 +94,7 @@ def _kcore_hindex(g: Graph) -> DataFrame:
         .select("id", F.coalesce("h", F.lit(0)).cast("long").alias("h"))
     )
 
-    while True:
+    def step(h: DataFrame):
         nbr = sym.join(
             h.select(F.col("id").alias("dst"), F.col("h").alias("_hn")), "dst"
         ).select("src", "_hn")
@@ -109,7 +104,6 @@ def _kcore_hindex(g: Graph) -> DataFrame:
             .groupBy(F.col("src").alias("id"))
             .agg(F.max(F.least(F.col("_hn"), F.col("_rk"))).alias("_hi"))
         )
-        obs = Observation()
         nxt = (
             h.withColumnRenamed("h", "_old")
             .join(hidx, "id", "left")
@@ -118,21 +112,13 @@ def _kcore_hindex(g: Graph) -> DataFrame:
                 F.coalesce("_hi", F.lit(0)).cast("long").alias("h"),
                 "_old",
             )
-            .observe(
-                obs,
-                F.sum(
-                    F.when(F.col("h") != F.col("_old"), 1).otherwise(0)
-                ).alias("changed"),
-            )
-            .drop("_old")
-            .transform(truncate_lineage)
         )
-        changed = obs.get["changed"]
-        h = nxt
-        if changed == 0:
-            break
+        return nxt, {"changed": count_changed("h", "_old")}
 
-    sym.unpersist()
+    h, _ = fixpoint(
+        h, step, phase="kcore", done=lambda row: row["changed"] == 0,
+        release=[sym],
+    )
     out = g.with_names(h.select("id", F.col("h").alias("coreness")))
     return out.select("name", "id", "coreness").orderBy(
         F.desc("coreness"), F.asc("id")
@@ -147,7 +133,7 @@ def _kcore_peel(g: Graph) -> DataFrame:
     sym = (
         symmetrize(canonical_undirected(g.edges))
         .repartition(nparts, "src")
-        .persist(_STORAGE)
+        .persist(STORAGE)
     )
 
     # state: (id, deg) of still-alive vertices; (id, coreness) accumulator
@@ -208,7 +194,7 @@ def _kcore_peel(g: Graph) -> DataFrame:
                              "left_semi")
                     .join(ids.withColumnRenamed("id", "dst"), "dst",
                           "left_semi")
-                    .persist(_STORAGE)
+                    .persist(STORAGE)
                 )
                 nxt.count()
                 sym.unpersist()

@@ -10,20 +10,18 @@ change); then fold the ground's mass back evenly:
 
 Spark shape: the ground node is one extra vertex id (n); the augmented
 edge frame is built once and the sweep is the shared scatter-gather
-kernel (one join + one groupBy per iteration).
+kernel (one join + one groupBy per iteration), one
+:func:`~propagon_spark.plans.iterate.fixpoint` turn — one job — each.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from propagon_spark.canon import dedup_edges
-from propagon_spark.errors import NumericError
 from propagon_spark.graph.core import Graph, sorted_scores
-from propagon_spark.plans.iterate import truncate_lineage, truncate_lineage_lazy
+from propagon_spark.plans.iterate import fixpoint, truncate_lineage
 
 
 def leader_rank(
@@ -56,9 +54,7 @@ def leader_rank(
         .transform(truncate_lineage)
     )
 
-    it = 0
-    while it < iterations:
-        it += 1
+    def step(pi: DataFrame):
         nxt = (
             pi.withColumnRenamed("pi", "old")
             .join(
@@ -71,17 +67,13 @@ def leader_rank(
                 "left",
             )
             .select("id", "old", F.coalesce("m", F.lit(0.0)).alias("pi"))
-            .transform(truncate_lineage_lazy)
         )
-        agg = nxt.agg(
-            F.sum(F.abs(F.col("pi") - F.col("old"))).alias("change")
-        ).first()
-        change = agg["change"]
-        if change is None or not math.isfinite(change):
-            raise NumericError(f"leader-rank diverged at iteration {it}")
-        pi = nxt.select("id", "pi")
-        if change < tolerance:
-            break
+        return nxt, {"change": F.sum(F.abs(F.col("pi") - F.col("old")))}
+
+    pi, _ = fixpoint(
+        pi, step, phase="leader-rank", max_turns=iterations,
+        done=lambda row: row["change"] < tolerance,
+    )
 
     g_mass = pi.where(F.col("id") == ground).first()["pi"]
     scores = pi.where(F.col("id") != ground).select(

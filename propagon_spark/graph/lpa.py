@@ -15,24 +15,21 @@ semantics (Raghavan et al. 2007) with deterministic tie-breaks
 Spark shape per round: one scatter join (labels onto symmetric edges),
 ``groupBy(dst, label).count()`` for neighborhood histograms, then a
 ``max_by``-style struct-max to pick (count desc, label asc) — two shuffles
-per round, all integer reductions, no floats and no Python.
+per round, all integer reductions, no floats and no Python. Each round is
+one :func:`~propagon_spark.plans.iterate.fixpoint` turn: one job that
+checkpoints the labels and observes how many changed.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from propagon_spark.canon import canonical_undirected, symmetrize
 from propagon_spark.graph.core import Graph
-from propagon_spark.plans.iterate import truncate_lineage, truncate_lineage_lazy
-
-# deserialized columnar cache: the serialized level costs ~1.5x to build
-# and ~3.5x per re-read at 2e8 rows (measured; see BENCH/BASELINE.md) -
-# iterative kernels re-read their persisted frames every pass
-_STORAGE = StorageLevel.MEMORY_AND_DISK_DESER
-
+from propagon_spark.plans.iterate import (
+    STORAGE, count_changed, fixpoint, truncate_lineage,
+)
 
 def label_propagation(g: Graph, max_rounds: int = 20) -> DataFrame:
     """Return ``(name, id, label)`` community assignments.
@@ -45,7 +42,7 @@ def label_propagation(g: Graph, max_rounds: int = 20) -> DataFrame:
     sym = (
         symmetrize(canonical_undirected(g.edges))
         .repartition(nparts, "src")
-        .persist(_STORAGE)
+        .persist(STORAGE)
     )
     sym.count()
 
@@ -55,9 +52,7 @@ def label_propagation(g: Graph, max_rounds: int = 20) -> DataFrame:
         .transform(truncate_lineage)
     )
 
-    rounds = 0
-    while rounds < max_rounds:
-        rounds += 1
+    def step(labels: DataFrame):
         # neighborhood label histogram: for each dst, count labels of its
         # neighbors (src side carries the labels)
         hist = (
@@ -70,29 +65,19 @@ def label_propagation(g: Graph, max_rounds: int = 20) -> DataFrame:
         best = hist.groupBy("id").agg(
             F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))).alias("b")
         ).select("id", (-F.col("b.nl")).alias("nlabel"))
-
-        obs = Observation()
-        updated = (
+        # labels appears twice in this plan: the driver truncates lineage
+        # each round
+        nxt = (
             labels.withColumnRenamed("label", "old")
             .join(best, "id", "left")
             .select("id", "old", F.coalesce("nlabel", F.col("old")).alias("label"))
             .repartition(nparts, "id")
-            .observe(
-                obs,
-                F.sum(
-                    F.when(F.col("label") != F.col("old"), 1).otherwise(0)
-                ).alias("changed"),
-            )
-            .drop("old")
-            # labels appears twice in this plan → truncate lineage each
-            # round; the changed-count is an observed metric of the same job
-            .transform(truncate_lineage)
         )
-        changed = obs.get["changed"]
-        labels = updated
-        if changed == 0:
-            break
+        return nxt, {"changed": count_changed("label", "old")}
 
-    sym.unpersist()
+    labels, _ = fixpoint(
+        labels, step, phase="lpa", max_turns=max_rounds,
+        done=lambda row: row["changed"] == 0, release=[sym],
+    )
     out = g.with_names(labels).select("name", "id", "label")
     return out.orderBy("label", "id")

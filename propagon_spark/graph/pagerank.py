@@ -46,23 +46,17 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from propagon_spark.canon import dedup_edges
 from propagon_spark.errors import InvalidParameterError, NumericError
 from propagon_spark.graph.core import Graph, sorted_scores
 from propagon_spark.plans.checkpoint import CheckpointManager
-from propagon_spark.plans.iterate import truncate_lineage
+from propagon_spark.plans.iterate import STORAGE, truncate_lineage
 from propagon_spark.progress import as_progress
 
 logger = logging.getLogger("propagon_spark.pagerank")
 
 _SINKS = ("none", "uniform", "all", "reverse")
-
-# deserialized columnar cache: the serialized level costs ~1.5x to build
-# and ~3.5x per re-read at 2e8 rows (measured; see BENCH/BASELINE.md) -
-# iterative kernels re-read their persisted frames every pass
-_STORAGE = StorageLevel.MEMORY_AND_DISK_DESER
 
 # Skew guard for the folded dedup (repartition-by-src-then-distinct):
 # probe partition sizes only when a partition above the row floor is even
@@ -279,7 +273,7 @@ def pagerank(
         edges = dedup_edges(g.edges)
         if sink == "reverse":
             edges = _reverse_rewrite(edges)
-    edges = edges.persist(_STORAGE)
+    edges = edges.persist(STORAGE)
 
     # validate seeds up front (shared by both kernels)
     _teleport_frame(g, seeds)
@@ -326,14 +320,14 @@ def pagerank(
                 ).otherwise(F.lit(0)),
             )
             .repartition(loop_nparts, "src", "salt")
-            .persist(_STORAGE)
+            .persist(STORAGE)
         )
         salt_df = spark.range(hub_salts).select(F.col("id").cast("int").alias("salt"))
     elif pre_partitioned:
         # already hash-partitioned by src (dedup rode the same exchange)
-        scatter = scatter_base.persist(_STORAGE)
+        scatter = scatter_base.persist(STORAGE)
     else:
-        scatter = scatter_base.repartition(loop_nparts, "src").persist(_STORAGE)
+        scatter = scatter_base.repartition(loop_nparts, "src").persist(STORAGE)
 
     # vertex frame: (id, v, is_sink) — static across iterations
     vstat = (
@@ -345,7 +339,7 @@ def pagerank(
         )
         .select("id", "v", F.coalesce(F.col("ns"), F.lit(True)).alias("is_sink"))
         .repartition(loop_nparts, "id")
-        .persist(_STORAGE)
+        .persist(STORAGE)
     )
     vstat.count()
     # sink-free graphs (every vertex has out-edges — e.g. any symmetric
@@ -524,9 +518,7 @@ def pagerank(
     # cost (Catalyst planning, scheduling, lineage materialization) while
     # bounding overshoot by the prediction error instead of a fixed C−1.
     two_phase = has_sinks and sink in ("uniform", "all")
-    chain_max = 1 if two_phase else (
-        int(os.environ.get("PROPAGON_JOIN_CHAIN", "0")) or 8
-    )
+    chain_max = 8
     converged = False
     it = start_iter
     last_ckpt = start_iter
@@ -535,11 +527,6 @@ def pagerank(
     mass_cur = float(metrics[-1]["mass"]) if metrics else 1.0
     prev_l1: float | None = None
     rate: float | None = None
-    # PROPAGON_JOIN_PHASES=1: scaling-audit mode — forces single steps so
-    # per-turn seconds are per-ITERATION seconds. The gather/update phase
-    # split is recorded unconditionally (it falls out of the two-job
-    # structure); a trivial-job sample estimates the per-job fixed cost.
-    diag = os.environ.get("PROPAGON_JOIN_PHASES") == "1"
     timings = {"kernel": "join", "edge_rows": n_scatter,
                "gather_mode": timings_gather_mode,
                "dedup_plan": "folded" if pre_partitioned else "separate",
@@ -554,17 +541,13 @@ def pagerank(
     aqe_key = "spark.sql.adaptive.enabled"
     aqe_old = spark.conf.get(aqe_key, "true")
     spark.conf.set(aqe_key, "false")
-    if diag:
-        t_f = time.monotonic()
-        spark.range(loop_nparts * 1000).repartition(loop_nparts, "id").count()
-        timings["fixed_job_s"] = time.monotonic() - t_f
 
     prog.start("pagerank", total=total_iters)
     try:
         while it < total_iters:
             t0 = time.monotonic()
             need_delta = tol is not None
-            if two_phase or diag:
+            if two_phase:
                 steps = 1
             elif tol is None:
                 steps = min(chain_max, total_iters - it)
@@ -577,12 +560,9 @@ def pagerank(
                 steps = max(1, min(chain_max, math.ceil(need)))
             steps = min(steps, total_iters - it)
 
-            if two_phase or diag:
+            if two_phase:
                 # job A: edge pass; Σm observed on the SAME job, so the
                 # sink-mass scalar costs no extra pass and no broadcast.
-                # diag forces this two-job shape on sink-free graphs too,
-                # so the audit gets the gather/update split per iteration
-                # (production sink-free runs use the cheaper chained job).
                 t_g = time.monotonic()
                 obs_g = Observation()
                 gath = truncate_lineage(
@@ -592,10 +572,7 @@ def pagerank(
                 )
                 sigma = float(obs_g.get["sigma"])
                 timings["iterate_gather_s"] += time.monotonic() - t_g
-                cur = update_from(
-                    gath, need_delta, ranks,
-                    mass_cur - sigma if two_phase else 0.0,
-                )
+                cur = update_from(gath, need_delta, ranks, mass_cur - sigma)
             else:
                 cur = ranks
                 pure = steps - 1 if need_delta else steps
@@ -696,14 +673,13 @@ def pagerank(
     finally:
         spark.conf.set(aqe_key, aqe_old)
         prog.finish()
+        scatter.unpersist()
+        vstat.unpersist()
 
     scores = sorted_scores(
         g.with_names(ranks.select("id", F.col("rank").alias("score")))
         .select("name", "score")
     )
-    scatter.unpersist()
-    vstat.unpersist()
-    edges.unpersist()
     return PageRankResult(
         scores=scores,
         ranks=ranks,

@@ -11,27 +11,26 @@ Semantics:
 - stationary distribution sums to 1.
 
 Spark shape: one pair-aggregation pass builds the transition edge frame,
-then the shared scatter-gather power iteration.
+then :func:`stationary_walk` — the power iteration random-walker shares —
+runs one scatter-gather join+agg per iteration as one
+:func:`~propagon_spark.plans.iterate.fixpoint` turn (one job).
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from propagon_spark.errors import EmptyDatasetError, NumericError
+from propagon_spark.errors import EmptyDatasetError
 from propagon_spark.graph.core import sorted_scores
 from propagon_spark.ids import build_vocab
-from propagon_spark.plans.iterate import truncate_lineage
+from propagon_spark.plans.iterate import fixpoint, truncate_lineage
 
 
-def rank_centrality(
-    pairwise: DataFrame, iterations: int = 200, tolerance: float = 1e-10
-) -> DataFrame:
-    """Fit on a ``(winner, loser, weight[, period])`` frame; returns
-    ``(name, score)`` (scores sum to 1)."""
+def pairwise_ids(pairwise: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Intern the entity names of a ``(winner, loser, weight[, period])``
+    frame; returns its ``(wi, li, x)`` id rows and the vocab. Empty input
+    is a typed error."""
     raw = pairwise.select(
         F.col("winner").cast("string").alias("w"),
         F.col("loser").cast("string").alias("l"),
@@ -39,20 +38,75 @@ def rank_centrality(
     )
     if raw.rdd.isEmpty():
         raise EmptyDatasetError("empty pairwise dataset")
-
     vocab = build_vocab(
         raw.select(F.col("w").alias("name")).unionAll(
             raw.select(F.col("l").alias("name"))
         )
     )
-    n = vocab.count()
-
     ids_w = vocab.select(F.col("name").alias("w"), F.col("id").alias("wi"))
     ids_l = vocab.select(F.col("name").alias("l"), F.col("id").alias("li"))
+    return raw.join(ids_w, "w").join(ids_l, "l").select("wi", "li", "x"), vocab
+
+
+def stationary_walk(
+    vocab: DataFrame, trans: DataFrame, iterations: int, tolerance: float,
+    phase: str,
+) -> DataFrame:
+    """Power-iterate the walk over ``trans (src, dst, p)`` plus implicit
+    self-loops ``π_i·(1−Σ leaving)`` from uniform until the L1 change
+    drops below ``tolerance``; returns the sorted ``(name, score)``
+    stationary distribution."""
+    n = vocab.count()
+    stay = truncate_lineage(
+        vocab.select("id")
+        .join(
+            trans.groupBy(F.col("src").alias("id")).agg(
+                F.sum("p").alias("leave")
+            ),
+            "id",
+            "left",
+        )
+        .select("id", (1.0 - F.coalesce("leave", F.lit(0.0))).alias("stay"))
+    )
+    pi = truncate_lineage(vocab.select("id", F.lit(1.0 / n).alias("pi")))
+
+    def step(pi: DataFrame):
+        gathered = (
+            trans.join(pi.withColumnRenamed("id", "src"), "src")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum(F.col("p") * F.col("pi")).alias("m"))
+        )
+        nxt = (
+            stay.join(pi, "id")
+            .join(gathered, "id", "left")
+            .select(
+                "id",
+                F.col("pi").alias("old"),
+                (
+                    F.col("pi") * F.col("stay")
+                    + F.coalesce("m", F.lit(0.0))
+                ).alias("pi"),
+            )
+        )
+        return nxt, {"change": F.sum(F.abs(F.col("pi") - F.col("old")))}
+
+    pi, _ = fixpoint(
+        pi, step, phase=phase, max_turns=iterations,
+        done=lambda row: row["change"] < tolerance,
+    )
+    return sorted_scores(
+        vocab.join(pi, "id").select("name", F.col("pi").alias("score"))
+    )
+
+
+def rank_centrality(
+    pairwise: DataFrame, iterations: int = 200, tolerance: float = 1e-10
+) -> DataFrame:
+    """Fit on a ``(winner, loser, weight[, period])`` frame; returns
+    ``(name, score)`` (scores sum to 1)."""
+    rows, vocab = pairwise_ids(pairwise)
     wins = (
-        raw.join(ids_w, "w")
-        .join(ids_l, "l")
-        .groupBy(F.col("wi").alias("a"), F.col("li").alias("b"))
+        rows.groupBy(F.col("wi").alias("a"), F.col("li").alias("b"))
         .agg(F.sum("x").alias("wab"))
     )
 
@@ -93,46 +147,4 @@ def rank_centrality(
             )
         )
     )
-    leaving = trans.groupBy(F.col("src").alias("id")).agg(
-        F.sum("p").alias("leave")
-    )
-    stay = truncate_lineage(
-        vocab.select("id")
-        .join(leaving, "id", "left")
-        .select("id", (1.0 - F.coalesce("leave", F.lit(0.0))).alias("stay"))
-    )
-
-    pi = truncate_lineage(
-        vocab.select("id", F.lit(1.0 / n).alias("pi"))
-    )
-    it = 0
-    while it < iterations:
-        it += 1
-        gathered = (
-            trans.join(pi.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("p") * F.col("pi")).alias("m"))
-        )
-        nxt = (
-            stay.join(pi, "id")
-            .join(gathered, "id", "left")
-            .select(
-                "id",
-                F.col("pi").alias("old"),
-                (
-                    F.col("pi") * F.col("stay")
-                    + F.coalesce("m", F.lit(0.0))
-                ).alias("pi"),
-            )
-            .transform(truncate_lineage)
-        )
-        change = nxt.agg(F.sum(F.abs(F.col("pi") - F.col("old")))).first()[0]
-        if change is None or not math.isfinite(change):
-            raise NumericError(f"rank-centrality diverged at iteration {it}")
-        pi = nxt.select("id", "pi")
-        if change < tolerance:
-            break
-
-    return sorted_scores(
-        vocab.join(pi, "id").select("name", F.col("pi").alias("score"))
-    )
+    return stationary_walk(vocab, trans, iterations, tolerance, "rank-centrality")

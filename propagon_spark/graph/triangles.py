@@ -18,15 +18,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from propagon_spark.canon import canonical_undirected
 from propagon_spark.graph.core import Graph
-
-# deserialized columnar cache: the serialized level costs ~1.5x to build
-# and ~3.5x per re-read at 2e8 rows (measured; see BENCH/BASELINE.md) -
-# iterative kernels re-read their persisted frames every pass
-_STORAGE = StorageLevel.MEMORY_AND_DISK_DESER
+from propagon_spark.plans.iterate import STORAGE
 
 
 def _oriented(g: Graph) -> DataFrame:
@@ -53,7 +48,7 @@ def _oriented(g: Graph) -> DataFrame:
 
 def triangles(g: Graph) -> DataFrame:
     """Return one row per triangle: ``(x, y, z)`` vertex ids with x<y<z."""
-    o = _oriented(g).persist(_STORAGE)
+    o = _oriented(g).persist(STORAGE)
     o.count()
     # wedges centered at the low-order vertex: a→b, a→c with b != c
     w = (

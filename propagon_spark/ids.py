@@ -111,6 +111,3 @@ def build_vocab(names: DataFrame, num_buckets: int | None = None) -> DataFrame:
     d.unpersist()
     return out
 
-
-def vocab_size(vocab: DataFrame) -> int:
-    return vocab.count()

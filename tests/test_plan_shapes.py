@@ -15,7 +15,9 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from propagon_spark.graph.core import Graph
@@ -113,3 +115,48 @@ def test_lsh_candidate_distinct_keys_on_id_pair_only(spark):
     for ln in dedup_aggs:
         keys = ln.split("keys=[", 1)[1].split("]", 1)[0]
         assert "_qv" not in keys and "_cv" not in keys and "embedding" not in keys
+
+
+def _fit_jobs(spark, fit) -> int:
+    """Spark jobs one kernel call runs, counted through its job group."""
+    sc = spark.sparkContext
+    group = f"jobs-per-turn-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fit()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "kernel", ["katz", "leader_rank", "rank_centrality", "random_walker"]
+)
+def test_fixpoint_kernels_run_one_job_per_turn(spark, kernel):
+    # each turn of a single-frame loop is ONE job: the eager checkpoint of
+    # the next state, with the stop test's scalars observed on that job
+    from propagon_spark.graph.katz import katz
+    from propagon_spark.graph.leader_rank import leader_rank
+    from propagon_spark.graph.random_walker import random_walker
+    from propagon_spark.graph.rank_centrality import rank_centrality
+
+    rows = [("a", "b", 2.0), ("b", "c", 1.0), ("c", "a", 1.0), ("a", "c", 1.0)]
+    frame = spark.createDataFrame(rows, "src string, dst string, weight double")
+    games = frame.toDF("winner", "loser", "weight")
+    g = Graph.from_edges(frame, weight="weight")
+    fits = {
+        "katz": lambda it: katz(g, iterations=it, tolerance=0.0),
+        "leader_rank": lambda it: leader_rank(g, iterations=it, tolerance=0.0),
+        "rank_centrality": lambda it: rank_centrality(
+            games, iterations=it, tolerance=0.0
+        ),
+        "random_walker": lambda it: random_walker(
+            games, iterations=it, tolerance=0.0
+        ),
+    }
+    try:
+        jobs2 = _fit_jobs(spark, lambda: fits[kernel](2))
+        jobs4 = _fit_jobs(spark, lambda: fits[kernel](4))
+    finally:
+        g.unpersist()
+    assert jobs4 - jobs2 == 2

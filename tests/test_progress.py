@@ -79,3 +79,29 @@ def test_as_progress_normalization():
     assert as_progress(p) is p
     with pytest.raises(TypeError):
         as_progress(42)
+
+
+def _cached_frames(spark) -> list[str]:
+    """Names of the live DataFrame cache entries (localCheckpoint blocks
+    are ``MapPartitionsRDD`` entries and are left out)."""
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return sorted(i.name() for i in infos if i.name() != "MapPartitionsRDD")
+
+
+@pytest.mark.parametrize("kernel", ["components", "pagerank_join"])
+def test_failed_fit_releases_its_caches(spark, kernel):
+    g = chain_graph(spark)
+
+    def boom(phase, metrics):
+        raise RuntimeError("callback failed")
+
+    before = _cached_frames(spark)
+    try:
+        with pytest.raises(RuntimeError, match="callback failed"):
+            if kernel == "components":
+                connected_components(g, progress=boom)
+            else:
+                pagerank(g, iterations=3, impl="join", progress=boom)
+        assert _cached_frames(spark) == before
+    finally:
+        g.unpersist()
