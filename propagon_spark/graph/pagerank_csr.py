@@ -31,9 +31,12 @@ kernel in pagerank.py, which has no such cap. Driver-side numpy updates
 also make score sums bit-deterministic at any parallelism (fixed
 summation order), strictly stronger than the 1e-6 allclose contract.
 
-Semantics are identical to pagerank.py (same sink policies / teleport /
-init / update rule); csr/join equality is pinned by the parametrized
-cases in tests/test_pagerank.py (impl="csr" vs impl="join").
+This module holds the kernel's setup and power step
+(:class:`CsrKernel`); ``pagerank()`` in pagerank.py owns the turn loop,
+seeds, resume, checkpoints, progress and the metrics rows. Semantics are
+identical to the join kernel there (same sink policies / teleport / init
+/ update rule); csr/join equality is pinned by the parametrized cases in
+tests/test_pagerank.py (impl="csr" vs impl="join").
 
 Cluster-safety: edge blocks live under the SparkContext checkpoint
 directory (set by session.get_spark / setCheckpointDir). When that
@@ -49,7 +52,6 @@ not the local-rename path measured here).
 
 from __future__ import annotations
 
-import math
 import os
 import re
 import shutil
@@ -57,14 +59,15 @@ import tempfile
 import time
 import uuid as _uuid
 from collections.abc import Iterator
+from contextlib import ExitStack
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from propagon_spark.errors import NumericError
-from propagon_spark.graph.core import Graph, sorted_scores
+from propagon_spark.graph.core import Graph
+from propagon_spark.plans.iterate import STORAGE
 
 
 #: worker-process block cache: {(fit_token, block_file): (src, dst)}.
@@ -81,14 +84,14 @@ _BLOCK_CACHE: dict = {}
 #: per-worker cache budget in bytes (task→worker binding is not stable,
 #: so a worker can accumulate many blocks over a long fit; evict FIFO
 #: beyond this). Uncached blocks are re-read from Parquet — cheap.
-_CACHE_BYTES = int(os.environ.get("PROPAGON_CSR_CACHE_BYTES", 2_000_000_000))
+_CACHE_BYTES = 2_000_000_000
 
 #: per-worker cap on cached mmap ENTRIES: each np.load(mmap_mode="r")
 #: holds an open file descriptor until evicted, and a long fit can walk a
 #: worker across many buckets' shards (unstable task→worker binding).
 #: 512 entries = 1024 fds worst case, inside a default RLIMIT_NOFILE;
 #: eviction costs one re-mmap on the next touch, no decode.
-_MMAP_CACHE_ENTRIES = int(os.environ.get("PROPAGON_CSR_MMAP_ENTRIES", 512))
+_MMAP_CACHE_ENTRIES = 512
 
 
 def _cache_size() -> int:
@@ -361,34 +364,12 @@ def _gather_factory(n: int, nblocks: int, ext: str, rank_bc, token: str):
     return gather
 
 
-def pagerank_csr(
-    g: Graph,
-    edges: DataFrame,
-    damping: float,
-    sink: str,
-    seeds: dict[str, float] | None,
-    tol: float | None,
-    iterations: int,
-    max_iterations: int,
-    checkpoint_interval: int,
-    ckpt,
-    start_iter: int,
-    init_ranks: pd.DataFrame | None,
-    metrics: list[dict],
-    logger,
-    prog=None,
-):
-    """Run the CSR power iteration. ``edges`` is the canonicalized
-    (dedup'd, sink-rewritten) id-typed edge frame. Returns
-    (rank_vector, iterations, converged, metrics)."""
-    spark = g.spark
+def _write_blocks(spark, edges: DataFrame, n: int, release: ExitStack):
+    """Bucket ``edges`` into block files by ``dst % nblocks``; returns
+    ``(blocks_rdd, nblocks, ext)``, where ``blocks_rdd`` holds one
+    ``(bucket, ';'-joined block paths)`` item per bucket. The block dir's
+    deletion is registered on ``release`` before the first file lands."""
     sc = spark.sparkContext
-    n = g.num_vertices
-    t_setup = time.monotonic()
-
-    n_edges = edges.count()  # materialize the persisted canonical frame ONCE
-    t_dedup = time.monotonic()
-
     # materialize dst-partitioned CSR block files once; workers mmap and
     # cache their blocks, so per-iteration traffic is one rank-vector
     # broadcast out and one n-row Arrow collect back. Blocks hold ONLY
@@ -403,6 +384,7 @@ def pagerank_csr(
         blocks_dir = ckdir.rstrip("/") + f"/csr_blocks_{_uuid.uuid4().hex}"
     else:
         blocks_dir = tempfile.mkdtemp(prefix="propagon_csr_")
+    release.callback(_hadoop_rm, spark, blocks_dir)
     # Bucket count is a LAYOUT parameter, decoupled from the core count
     # (round 2 coupled it to defaultParallelism, which confounded N→4N
     # scaling runs: different levels wrote different file/bucket layouts).
@@ -494,75 +476,102 @@ def pagerank_csr(
     blocks_rdd = sc.parallelize(
         block_rows, max(1, min(len(block_rows), sc.defaultParallelism))
     )
-    t_blocks = time.monotonic()
+    return blocks_rdd, nblocks, ext
 
-    # driver-held vertex state ------------------------------------------
-    if seeds is None:
-        v = np.full(n, 1.0 / n)
-    else:
-        total = float(sum(seeds.values()))
-        v = np.zeros(n)
-        seed_rows = (
-            spark.createDataFrame(
-                [(str(k),) for k in seeds], "name string"
-            )
-            .join(g.vocab, "name")
-            .select("name", "id")
-            .collect()
+
+class CsrKernel:
+    """The CSR kernel's state and power step, driven by ``pagerank()``.
+
+    Construction is the one-time setup: it persists ``edges`` (the
+    canonicalized, dedup'd and sink-rewritten id-typed frame), writes the
+    edge blocks, and builds the driver vectors (teleport ``v``, inverse
+    out-degree, sinks, ranks ``p`` from the teleport vector or the resume
+    ``state``). Every resource it takes is registered on ``release``.
+    """
+
+    #: one power step per turn: a turn's cost is all gather, nothing to
+    #: amortize by chaining
+    chain_max = 1
+
+    def __init__(self, g: Graph, edges: DataFrame, sink: str, damping: float,
+                 teleport: dict[int, float] | None,
+                 state: DataFrame | None, release: ExitStack):
+        spark = g.spark
+        n = g.num_vertices
+        t_setup = time.monotonic()
+
+        # persisted: the block write and the out-degree collect would each
+        # re-run the full-width distinct over the raw edge table
+        edges = edges.persist(STORAGE)
+        release.callback(edges.unpersist)
+        n_edges = edges.count()  # materialize the canonical frame ONCE
+        t_dedup = time.monotonic()
+
+        self.blocks_rdd, self.nblocks, self.ext = _write_blocks(
+            spark, edges, n, release
         )
-        id_of = {r["name"]: r["id"] for r in seed_rows}
-        for name, w in seeds.items():
-            v[id_of[str(name)]] = float(w) / total
+        t_blocks = time.monotonic()
 
-    # out-degree vector (one small collect): inv_out folds the division
-    # into the broadcast, and zero-outdegree rows ARE the sinks — no
-    # separate anti-join pass
-    odf = edges.groupBy("src").agg(F.count("*").alias("outdeg")).toPandas()
-    outdeg_vec = np.zeros(n)
-    outdeg_vec[odf["src"].to_numpy()] = odf["outdeg"].to_numpy()
-    inv_out = np.divide(
-        1.0, outdeg_vec, out=np.zeros(n), where=outdeg_vec > 0
-    )
-    sink_ids = np.nonzero(outdeg_vec == 0)[0].astype("int64")
+        # driver-held vertex state ------------------------------------------
+        if teleport is None:
+            v = np.full(n, 1.0 / n)
+        else:
+            v = np.zeros(n)
+            v[list(teleport)] = list(teleport.values())
+        # out-degree vector (one small collect): inv_out folds the division
+        # into the broadcast, and zero-outdegree rows ARE the sinks — no
+        # separate anti-join pass
+        odf = edges.groupBy("src").agg(F.count("*").alias("outdeg")).toPandas()
+        outdeg_vec = np.zeros(n)
+        outdeg_vec[odf["src"].to_numpy()] = odf["outdeg"].to_numpy()
+        self.inv_out = np.divide(
+            1.0, outdeg_vec, out=np.zeros(n), where=outdeg_vec > 0
+        )
+        self.sink_ids = np.nonzero(outdeg_vec == 0)[0].astype("int64")
+        # the loop reads only the blocks and the driver vectors
+        edges.unpersist()
+        if state is not None:
+            init = state.select("id", "rank").toPandas()
+            self.p = np.zeros(n)
+            self.p[init["id"].to_numpy()] = init["rank"].to_numpy()
+        else:
+            self.p = v.copy()
 
-    if init_ranks is not None:
-        p = np.zeros(n)
-        p[init_ranks["id"].to_numpy()] = init_ranks["rank"].to_numpy()
-    else:
-        p = v.copy()
+        self.spark, self.n = spark, n
+        self.sink, self.damping, self.v = sink, damping, v
+        self.token = _uuid.uuid4().hex
+        # per-phase wall time: where an N→4N scaling run spends its seconds
+        # (setup = canonicalize+block write, bcast/gather = per-iteration
+        # distributed work, update = serial driver numpy)
+        self.timings = {
+            "kernel": "csr",
+            "nblocks": self.nblocks,
+            "edge_rows": n_edges,
+            "setup_s": time.monotonic() - t_setup,
+            "setup_dedup_s": t_dedup - t_setup,
+            "setup_blocks_s": t_blocks - t_dedup,
+            "setup_state_s": time.monotonic() - t_blocks,
+            "bcast_s": 0.0,
+            "gather_s": 0.0,
+            "update_s": 0.0,
+        }
 
-    total_iters = iterations if tol is None else max_iterations
-    converged = False
-    it = start_iter
-    token = _uuid.uuid4().hex
-    # per-phase wall time: where an N→4N scaling run spends its seconds
-    # (setup = canonicalize+block write, bcast/gather = per-iteration
-    # distributed work, update = serial driver numpy)
-    timings = {
-        "kernel": "csr",
-        "nblocks": nblocks,
-        "edge_rows": n_edges,
-        "setup_s": time.monotonic() - t_setup,
-        "setup_dedup_s": t_dedup - t_setup,
-        "setup_blocks_s": t_blocks - t_dedup,
-        "setup_state_s": time.monotonic() - t_blocks,
-        "bcast_s": 0.0,
-        "gather_s": 0.0,
-        "update_s": 0.0,
-    }
-
-    while it < total_iters:
+    def advance(self, steps: int, need_delta: bool) -> tuple[float, float]:
+        """One power step (``steps`` is 1, see ``chain_max``); returns the
+        step's L1 delta — free on the driver, so always computed — and
+        the new rank mass."""
+        n, nblocks, p = self.n, self.nblocks, self.p
         t0 = time.monotonic()
         # p·inv_out on the driver (n multiplies) — elementwise identical
         # to the join kernel's rank·inv, keeping csr/join parity exact
-        rank_bc = sc.broadcast(p * inv_out)
+        rank_bc = self.spark.sparkContext.broadcast(p * self.inv_out)
         t_b = time.monotonic()
-        timings["bcast_s"] += t_b - t0
-        partials = blocks_rdd.mapPartitions(
-            _gather_factory(n, nblocks, ext, rank_bc, token)
+        self.timings["bcast_s"] += t_b - t0
+        partials = self.blocks_rdd.mapPartitions(
+            _gather_factory(n, nblocks, self.ext, rank_bc, self.token)
         ).collect()
         t_g = time.monotonic()
-        timings["gather_s"] += t_g - t_b
+        self.timings["gather_s"] += t_g - t_b
         # bucket b owns global ids {b, b+nblocks, ...}: local index i maps
         # to global b + i·nblocks, so each buffer lands as one strided
         # numpy assignment — no row decode, no join
@@ -573,48 +582,25 @@ def pagerank_csr(
             gathered[b::nblocks] = buf[:take]
         rank_bc.destroy()
 
+        sink_ids = self.sink_ids
         s_mass = float(p[sink_ids].sum()) if len(sink_ids) else 0.0
-        if sink == "uniform":
-            gathered += s_mass * v
-        elif sink == "all" and n > 1:
+        if self.sink == "uniform":
+            gathered += s_mass * self.v
+        elif self.sink == "all" and n > 1:
             term = np.full(n, s_mass)
             term[sink_ids] -= p[sink_ids]
             gathered += term / (n - 1)
-        new_p = damping * gathered + (1.0 - damping) * v
+        self.p = self.damping * gathered + (1.0 - self.damping) * self.v
+        l1 = float(np.abs(self.p - p).sum())
+        mass = float(self.p.sum())
+        self.timings["update_s"] += time.monotonic() - t_g
+        return l1, mass
 
-        l1 = float(np.abs(new_p - p).sum())
-        mass = float(new_p.sum())
-        if not (math.isfinite(l1) and math.isfinite(mass)):
-            raise NumericError(f"pagerank diverged at iteration {it}")
-        p = new_p
-        it += 1
-        timings["update_s"] += time.monotonic() - t_g
-        metrics.append(
-            {
-                "iteration": it,
-                "steps": 1,
-                "l1_delta": l1,
-                "mass": mass,
-                "seconds": time.monotonic() - t0,
-                "kernel": "csr",
-            }
+    def ranks(self) -> DataFrame:
+        """The current ranks as an ``(id, rank)`` frame."""
+        return self.spark.createDataFrame(
+            pd.DataFrame({"id": np.arange(self.n, dtype="int64"), "rank": self.p})
         )
-        if prog is not None:
-            prog.iteration("pagerank", metrics[-1])
-        logger.info(
-            "pagerank[csr] iter=%d l1=%.3e mass=%.6f %.2fs",
-            it, l1, mass, metrics[-1]["seconds"],
-        )
-
-        if ckpt is not None and it % checkpoint_interval == 0:
-            ckpt.save(it, _ranks_df(spark, p), metrics)
-
-        if tol is not None and l1 < tol:
-            converged = True
-            break
-
-    _hadoop_rm(spark, blocks_dir)
-    return p, it, converged, metrics, timings
 
 
 def _hadoop_rm(spark, path: str) -> None:
@@ -626,18 +612,3 @@ def _hadoop_rm(spark, path: str) -> None:
         fs.delete(jpath, True)
     except Exception:
         shutil.rmtree(path, ignore_errors=True)
-
-
-def _ranks_df(spark, p: np.ndarray) -> DataFrame:
-    return spark.createDataFrame(
-        pd.DataFrame({"id": np.arange(len(p), dtype="int64"), "rank": p})
-    )
-
-
-def scores_from_vector(g: Graph, p: np.ndarray) -> DataFrame:
-    ranks = _ranks_df(g.spark, p)
-    return sorted_scores(
-        g.with_names(ranks.select("id", F.col("rank").alias("score"))).select(
-            "name", "score"
-        )
-    ), ranks

@@ -160,3 +160,24 @@ def test_fixpoint_kernels_run_one_job_per_turn(spark, kernel):
     finally:
         g.unpersist()
     assert jobs4 - jobs2 == 2
+
+
+@pytest.mark.parametrize("impl", ["csr", "join"])
+def test_seeded_pagerank_resolves_seeds_in_one_job(spark, impl):
+    # seed names resolve to ids with ONE collect, shared by the teleport
+    # vector (csr) and the vertex frame (join); nothing else changes
+    from propagon_spark.graph.pagerank import pagerank
+
+    rows = [(f"v{i}", f"v{(i + 1) % 6}") for i in range(6)]
+    g = Graph.from_edges(spark.createDataFrame(rows, "src string, dst string"))
+
+    def fit(**kw):
+        return _fit_jobs(spark, lambda: pagerank(g, iterations=2, impl=impl, **kw))
+
+    try:
+        fit()  # warm-up: one-time session work stays out of the counts
+        plain = fit()
+        seeded = fit(seeds={"v0": 2.0, "v3": 1.0})
+    finally:
+        g.unpersist()
+    assert seeded - plain == 1

@@ -8,6 +8,9 @@ log scraping.
 
 from __future__ import annotations
 
+import os
+from urllib.parse import urlparse
+
 import pytest
 
 from propagon_spark.graph.components import connected_components
@@ -26,6 +29,7 @@ def chain_graph(spark, n=6):
 
 def test_pagerank_callback_per_iteration_both_kernels(spark):
     g = chain_graph(spark)
+    row_keys = set()
     for impl in ("csr", "join"):
         calls = []
         res = pagerank(
@@ -37,6 +41,9 @@ def test_pagerank_callback_per_iteration_both_kernels(spark):
         assert sum(m["steps"] for _, m in calls) == res.iterations == 3
         assert calls == [("pagerank", m) for m in res.metrics]
         assert all("l1_delta" in m and "mass" in m for _, m in calls)
+        row_keys |= {frozenset(m) for _, m in calls}
+    # one metrics row schema, whichever kernel ran
+    assert len(row_keys) == 1
 
 
 def test_hits_callback_counts(spark):
@@ -88,7 +95,15 @@ def _cached_frames(spark) -> list[str]:
     return sorted(i.name() for i in infos if i.name() != "MapPartitionsRDD")
 
 
-@pytest.mark.parametrize("kernel", ["components", "pagerank_join"])
+def _csr_block_dirs(spark) -> list[str]:
+    """The CSR kernel's edge-block dirs under the checkpoint dir."""
+    ckdir = urlparse(spark.sparkContext.getCheckpointDir()).path
+    return sorted(e for e in os.listdir(ckdir) if e.startswith("csr_blocks_"))
+
+
+@pytest.mark.parametrize(
+    "kernel", ["components", "pagerank_join", "pagerank_csr"]
+)
 def test_failed_fit_releases_its_caches(spark, kernel):
     g = chain_graph(spark)
 
@@ -96,12 +111,15 @@ def test_failed_fit_releases_its_caches(spark, kernel):
         raise RuntimeError("callback failed")
 
     before = _cached_frames(spark)
+    blocks_before = _csr_block_dirs(spark)
     try:
         with pytest.raises(RuntimeError, match="callback failed"):
             if kernel == "components":
                 connected_components(g, progress=boom)
             else:
-                pagerank(g, iterations=3, impl="join", progress=boom)
+                impl = kernel.split("_")[1]
+                pagerank(g, iterations=3, impl=impl, progress=boom)
         assert _cached_frames(spark) == before
+        assert _csr_block_dirs(spark) == blocks_before
     finally:
         g.unpersist()
